@@ -864,7 +864,7 @@ def connected_components_hybrid(
     # round (changed == 0). Every level is lazily checkpointed and
     # materialized by its own metadata count (invariants 10/11).
     level, n_tasks = e, _uf_tasks(n_edges)
-    contracted = None
+    contracted, exact = None, False
     for _ in range(MAX_CONTRACTION_LEVELS):
         contracted = (
             level.repartition(n_tasks, "a")
@@ -873,7 +873,8 @@ def connected_components_hybrid(
         )
         m = contracted.count()  # materializes this level
         if n_tasks == 1:
-            break  # exact contraction achieved
+            exact = True  # a single-task contraction is exact
+            break
         level = contracted.select(
             F.col("node").alias("a"), F.col("lmin").alias("b")
         )
@@ -889,7 +890,7 @@ def connected_components_hybrid(
         .distinct()
         .select("node", F.col("node").alias("lmin"))
     )
-    if n_tasks == 1:
+    if exact:
         # the loop broke because the LAST contraction ran as ONE task:
         # a single-task union-find over the whole (possibly already
         # level-contracted) edge set IS the exact component-min

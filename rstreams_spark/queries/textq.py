@@ -747,6 +747,8 @@ SPAN_SIZE = 16  # tokens per dedup span (non-overlapping)
 # and downstream consumers build the same keeper key).
 SPAN_KEY_MUL = 100_000_000
 _SPAN_KEY_MUL = SPAN_KEY_MUL  # internal alias, kept for oracle text
+# largest |doc_id| whose doc_id*_SPAN_KEY_MUL+idx key fits a long
+_SPAN_DOC_MAX = (2**63 - 1) // _SPAN_KEY_MUL - 1
 
 
 def span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -809,10 +811,13 @@ def span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # doc_id while span_idx ∈ [0, MUL), so negative ids are
             # in-domain (the r13 negative_ids probe caught the old
             # `doc_id >= 0` clause rejecting a corpus the DuckDB twin
-            # computed correctly). isNull() keeps every legal row
+            # computed correctly). The bound compares both signs
+            # directly: abs(-2**63) wraps to itself when ANSI mode is
+            # off and would pass an abs-based check. isNull() keeps
+            # every legal row
             F.assert_true(
                 (F.col("span_idx") < _SPAN_KEY_MUL)
-                & (F.abs("doc_id") <= (2**63 - 1) // _SPAN_KEY_MUL - 1),
+                & F.col("doc_id").between(-_SPAN_DOC_MAX, _SPAN_DOC_MAX),
                 F.lit(
                     "span_dedup: (doc_id, span_idx) outside the "
                     "doc_id*1e8+idx key domain (span_idx < 1e8, "

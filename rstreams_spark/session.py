@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def _default_driver_mem() -> str:
@@ -31,21 +31,28 @@ def _default_driver_mem() -> str:
 def get_spark(
     app_name: str = "rstreams_spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
+    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
     AQE is on so post-shuffle partition counts, skew joins and
     dynamic broadcast decisions adapt at runtime — the same configs
-    we would ship to a 1000-executor cluster; only ``master`` and the
-    partition count are local-mode artifacts.
+    we would ship to a 1000-executor cluster; only ``master`` is a
+    local-mode artifact.
+
+    ``spark.sql.shuffle.partitions`` defaults to the executor slots
+    (``defaultParallelism``: the core count under ``local[N]``), so
+    each streaming state operator runs one partition per core. An
+    explicit ``shuffle_partitions`` or ``extra_conf`` entry wins. A
+    query restarted from a checkpoint keeps the count it was started
+    with (Spark restores it from the offset log), whatever the
+    session says.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # batch exchanges START wide and let AQE coalesce down by
@@ -55,9 +62,10 @@ def get_spark(
         # 22.5 s, GCLocker alloc stalls) but run linear at 256
         # initial (16.2 s, 3.2× on 3× data). Small stages coalesce
         # to the same few partitions as before, so sf0.1 plans and
-        # times are unchanged. Streaming is unaffected: structured
-        # streaming ignores AQE, so state-store partitioning stays
-        # pinned at spark.sql.shuffle.partitions.
+        # times are unchanged. Structured streaming turns AQE off, so
+        # its shuffles and state stores use spark.sql.shuffle.partitions
+        # instead: one partition per core (see the docstring), fixed
+        # per query by its checkpoint.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "256"),
@@ -92,9 +100,19 @@ def get_spark(
         # small-buffer minhash pipelines via ``oha_session`` below.
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if shuffle_partitions is not None:
+        conf.setdefault(SHUFFLE_PARTITIONS, str(shuffle_partitions))
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if SHUFFLE_PARTITIONS not in conf:
+        # the slot count is only known once the context is up. More
+        # partitions than slots run each micro-batch in waves of
+        # near-empty tasks, whose scheduling and state-store commits,
+        # not compute, set the trigger time (PERF.md)
+        spark.conf.set(SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 def gc_hygiene(spark: SparkSession) -> None:

@@ -126,23 +126,13 @@ def stream_lag_window(
                     # row p's buffer is the window ENDING at global
                     # index b+p, i.e. win[b+p-lag+1]
                     emit = win[start + b - lag + 1 :]
-                    # Arrow-native list column: a zero-copy ListArray
-                    # over the raveled window matrix. An object column
-                    # of ndarray views here measured ~12 ms per 20 k
-                    # rows (pandas build + Arrow convert) vs ~4.6 ms
-                    # this way — the output column was the single
-                    # largest term in the stateful path's budget.
-                    import pyarrow as pa
-
-                    flat = pa.array(np.ascontiguousarray(emit).ravel())
-                    offs = pa.array(
-                        np.arange(0, (len(emit) + 1) * lag, lag, dtype=np.int32)
-                    )
-                    out[names[i]] = pd.Series(
-                        pd.arrays.ArrowExtensionArray(
-                            pa.ListArray.from_arrays(offs, flat)
-                        )
-                    )
+                    # Python lists, not an Arrow list column: PySpark's
+                    # output converter runs list(x) on every row of an
+                    # array column anyway (lists measured ~2x cheaper),
+                    # and pads a batch holding more groups than rows
+                    # with None rows, which an Arrow dtype turns into
+                    # pd.NA that list() cannot iterate
+                    out[names[i]] = pd.Series(emit.tolist(), dtype=object)
                 else:
                     out[names[i]] = []
                 bufs[i] = allv[-lag:].tolist()

@@ -131,6 +131,30 @@ def test_span_dedup_removes_repeated_span(spark, tmp_path):
     assert rows[2]["n_tokens_kept"] == 16
 
 
+def test_span_dedup_guard_rejects_min_long_doc_id_without_ansi(spark, tmp_path):
+    """doc_id = -2**63 lies outside the doc_id*1e8+idx key domain.
+    With ANSI off, abs() of it wraps to itself, so the guard must not
+    rest on abs(): the query has to fail, not wrap the key."""
+    import pandas as pd
+    import pytest
+
+    from rstreams_spark.queries.textq import span_dedup
+
+    pd.DataFrame(
+        {
+            "doc_id": [-(2**63), 7],
+            "text": ["a b c", "a b c"],
+            "lang": ["en"] * 2,
+            "source": ["t"] * 2,
+            "n_chars": [5, 5],
+        }
+    ).to_parquet(f"{tmp_path}/documents.parquet")
+    sub = spark.newSession()
+    sub.conf.set("spark.sql.ansi.enabled", "false")
+    with pytest.raises(Exception, match="key domain"):
+        span_dedup(sub, str(tmp_path)).collect()
+
+
 def test_doc_commonness_exact_formula(spark, tmp_path):
     """commonness = Σ df(term occurrences) / (n_tokens · n_docs),
     exact rational: docs {a b, a c} → both (2+1)/(2·2) = 0.75."""

@@ -4,16 +4,23 @@ results the batch operators (and the reference) produce."""
 
 import datetime as dt
 import json
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from rstreams_spark.session import SHUFFLE_PARTITIONS
 from rstreams_spark.sinks import writers
 from rstreams_spark.sources import files
 from rstreams_spark.streaming import joins as sjoins
 from rstreams_spark.streaming import stateful, windows as swindows
 
 EPOCH = dt.datetime(2024, 1, 1)
+_ROOT = Path(__file__).resolve().parents[1]
 SCHEMA = "key string, ts timestamp, v double"
 
 
@@ -109,6 +116,53 @@ def test_stream_lag_window_state_across_batches(spark, tmp_path):
     q.stop()
     rows = [tuple(r["values"]) for r in spark.sql("select * from lag2_out").collect()]
     assert rows == [(1.0, 2.0)]
+
+
+def _lag_pairs(ticks, lag=2):
+    """Sequential model of stream_lag_window over ``(key, sec, v)``
+    ticks: one ``(key, sec, last lag values)`` row per tick once the
+    key has seen ``lag`` of them."""
+    seen: dict = {}
+    out = []
+    for k, sec, v in sorted(ticks):
+        buf = seen.setdefault(k, [])
+        buf.append(v)
+        if len(buf) >= lag:
+            out.append((k, sec, tuple(buf[-lag:])))
+    return sorted(out)
+
+
+def test_stream_lag_window_sparse_batches(spark, tmp_path):
+    """Many keys with one or two ticks per trigger: most groups emit
+    no row, so an output Arrow batch holds more groups than rows and
+    PySpark pads it with empty rows. The list column must take that
+    padding (an Arrow-dtype column turns it into pd.NA, which PySpark's
+    output converter cannot iterate) and every lag pair must come out
+    exactly once."""
+    src = tmp_path / "sparse"
+    src.mkdir()
+    v = lambda k, s: int(k[1:]) * 100 + s  # noqa: E731
+    triggers = [
+        [(f"k{i:03d}", 0) for i in range(400)],
+        [(f"k{i:03d}", 1) for i in range(600)],
+        [(f"k{i:03d}", s) for i in range(100) for s in (2, 3)]
+        + [(f"k{i:03d}", 2) for i in range(400, 1000)],
+    ]
+    stream = files.stream_files(spark, str(src), "json", SCHEMA)
+    out = stateful.stream_lag_window(stream, "key", "ts", 2, "v")
+    q = writers.stream_to_memory(out, "sparse_lag_out", "append")
+    try:
+        for n, rows in enumerate(triggers):
+            _append_events(src, f"part-{n}.json", rows, v)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    got = sorted(
+        (r["key"], int(r["ts"].timestamp() - EPOCH.timestamp()), tuple(r["values"]))
+        for r in spark.sql("select * from sparse_lag_out").collect()
+    )
+    ticks = [(k, s, float(v(k, s))) for rows in triggers for k, s in rows]
+    assert got == _lag_pairs(ticks)
 
 
 def test_stream_interval_join(spark, tmp_path):
@@ -1685,3 +1739,90 @@ def test_stream_sanitize_measures_drop_and_fail(spark):
     )
     out = stream_sanitize_measures(stream, "value")
     assert out.isStreaming
+
+
+# --- state partitions: get_spark sizes spark.sql.shuffle.partitions
+# to the executor slots; a checkpoint pins the count it started with.
+# The fixture session passes shuffle_partitions=8, so these vary the
+# count in sibling sessions and check the default in a fresh process.
+
+
+def test_checkpoint_keeps_state_partition_count(spark, tmp_path):
+    """Start stream_lag_window at 3 state partitions, stop it, and
+    restart it from the same checkpoint in a session set to 5: the
+    query stays at 3, and the per-key buffers carry over with no lost
+    or duplicated pair."""
+    src = tmp_path / "src"
+    src.mkdir()
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    v = lambda k, s: ord(k) * 100 + s  # noqa: E731
+    runs = [
+        (3, [(k, s) for k in "abcde" for s in (0, 1)]),
+        (5, [(k, s) for k in "abcdef" for s in (2, 3)]),
+    ]
+    counts = []
+    for n, (parts, rows) in enumerate(runs):
+        sess = spark.newSession()
+        sess.conf.set(SHUFFLE_PARTITIONS, str(parts))
+        _append_events(src, f"part-{n}.json", rows, v)
+        stream = files.stream_files(sess, str(src), "json", SCHEMA)
+        q = writers.stream_to_parquet(
+            stateful.stream_lag_window(stream, "key", "ts", 2, "v"), out, ckpt
+        )
+        try:
+            q.processAllAvailable()
+            counts.append(
+                {p["stateOperators"][0]["numShufflePartitions"] for p in q.recentProgress}
+            )
+        finally:
+            q.stop()
+    assert counts == [{3}, {3}]
+    got = sorted(
+        (r["key"], int(r["ts"].timestamp() - EPOCH.timestamp()), tuple(r["values"]))
+        for r in spark.read.parquet(out).collect()
+    )
+    ticks = [(k, s, float(v(k, s))) for _, rows in runs for k, s in rows]
+    assert got == _lag_pairs(ticks)
+
+
+_DEFAULT_PROBE = textwrap.dedent("""
+    import json, sys
+    sys.path.insert(0, sys.argv[1])
+    from rstreams_spark.session import SHUFFLE_PARTITIONS, get_spark
+    from rstreams_spark.sinks import writers
+    from rstreams_spark.sources import files
+    from rstreams_spark.streaming import stateful
+
+    spark = get_spark("state-partitions-probe")
+    res = {"slots": spark.sparkContext.defaultParallelism,
+           "conf": spark.conf.get(SHUFFLE_PARTITIONS)}
+    stream = files.stream_files(spark, sys.argv[2], "json", "key string, ts timestamp, v double")
+    q = writers.stream_to_memory(
+        stateful.stream_latest_per_key(stream, "key", "ts", "v"), "latest", "update")
+    q.processAllAvailable()
+    res["state"] = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+    q.stop()
+    res["arg"] = get_spark(shuffle_partitions=3).conf.get(SHUFFLE_PARTITIONS)
+    res["extra"] = get_spark(
+        shuffle_partitions=3, extra_conf={SHUFFLE_PARTITIONS: "5"}
+    ).conf.get(SHUFFLE_PARTITIONS)
+    print(json.dumps(res))
+""")
+
+
+def test_default_state_partitions_follow_slots(tmp_path):
+    """Under the shipped default a stateful query runs one state
+    partition per executor slot; an explicit ``shuffle_partitions``
+    overrides it and an ``extra_conf`` entry overrides both. A fresh
+    process on ``local[2]``, so the shared session stays as it is."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _append_events(src, "part-0.json", [("a", 0), ("b", 1), ("a", 2)])
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    p = subprocess.run(
+        [sys.executable, "-c", _DEFAULT_PROBE, str(_ROOT), str(src)],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    res = json.loads(p.stdout.strip().splitlines()[-1])
+    assert res == {"slots": 2, "conf": "2", "state": 2, "arg": "3", "extra": "5"}

@@ -97,12 +97,18 @@ def test_chunk_timeout_partitioned(spark):
 def test_global_ordinal_and_chunk_timeout_cross_shard(spark):
     """The distributed global forms must equal the sequential
     definition on data that spans MANY range shards (200 rows over
-    32 shuffle partitions → every shard boundary is exercised):
-    ordinal = sorted position, sessions split exactly at >gap
-    silences, chunks every `size` rows within a session."""
+    8 range shards → every shard boundary is exercised; a sibling
+    session turns AQE partition coalescing off, which would merge
+    200 rows into one shard): ordinal = sorted position, sessions
+    split exactly at >gap silences, chunks every `size` rows within
+    a session."""
     import datetime as dt
 
     import random
+
+    sub = spark.newSession()
+    sub.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    sub.conf.set("spark.sql.shuffle.partitions", "8")
 
     rnd = random.Random(7)
     base = dt.datetime(2024, 1, 1)
@@ -110,9 +116,11 @@ def test_global_ordinal_and_chunk_timeout_cross_shard(spark):
     for _ in range(200):
         cur += rnd.choice([1, 2, 3, 30])  # ~25% of steps open a session
         secs.append(cur)
-    df = spark.createDataFrame(
+    df = sub.createDataFrame(
         [Row(ts=base + dt.timedelta(seconds=s), n=i) for i, s in enumerate(secs)]
     )
+    shards = df.repartitionByRange("ts", "n").select(F.spark_partition_id())
+    assert shards.distinct().count() == 8
     got_ord = {
         r["n"]: r["__ord"]
         for r in stateless.ordinal(df, ["ts", "n"]).collect()
