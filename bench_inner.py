@@ -43,7 +43,10 @@ def main() -> None:
     # plan pays multi-second janino compilation that has nothing to
     # do with data-scale throughput (measured: 8.9 s cold vs 2.2 s
     # warm for the same sf0.1 query). The smallest SF sits next to
-    # the bench SF; without it the warm pass is skipped
+    # the bench SF; without it the warm pass is skipped. Until
+    # get_spark sized Spark's codegen cache to the catalog, the 100-
+    # entry default kept only the last 100 classes of this pass, so
+    # timed rounds recompiled most of them (codegen_compiles below)
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
 
     def run(df) -> None:
@@ -73,13 +76,16 @@ def main() -> None:
     # capture all three. Draws ride in bench_history.jsonl so the
     # judge (and bench_diff) can see the spread behind every median.
     draws: dict[str, list[float]] = {}
-    from rstreams_spark.session import gc_hygiene
+    from rstreams_spark.session import codegen_stats, gc_hygiene
 
+    # per-round codegen work, so a cache thrash shows up as a number
+    codegen: dict[str, list[float]] = {"codegen_compiles": [], "codegen_ms": []}
     for _ in range(3):
         # round-boundary hygiene: dead checkpoint blocks from the
         # previous round otherwise accumulate across ~120 query
         # executions and skew late draws (session.gc_hygiene)
         gc_hygiene(spark)
+        cg0 = codegen_stats(spark)
         for name in headliners:
             if name in errors:
                 continue
@@ -92,6 +98,9 @@ def main() -> None:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
                 draws.pop(name, None)
                 print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
+        cg1 = codegen_stats(spark)
+        codegen["codegen_compiles"].append(cg1["compiles"] - cg0["compiles"])
+        codegen["codegen_ms"].append(round(cg1["ms"] - cg0["ms"], 1))
     for name, ds in draws.items():
         times[name] = sorted(ds)[len(ds) // 2]  # median draw
     for name in headliners:
@@ -119,6 +128,7 @@ def main() -> None:
         streaming.update(bench_streaming.measure_dedup_gates(spark, sf_dir))
     except Exception as exc:
         streaming["gate_err"] = f"{type(exc).__name__}: {exc}"[:300]
+    print(f"# codegen per round: {codegen}", file=sys.stderr)
     print(f"# streaming: {streaming}", file=sys.stderr)
 
     payload = build_payload(
@@ -137,7 +147,7 @@ def main() -> None:
     except Exception:
         rev = None
     try:
-        hist = dict(payload, draws=draws, ts=int(time.time()), commit=rev)
+        hist = dict(payload, draws=draws, **codegen, ts=int(time.time()), commit=rev)
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          "bench_history.jsonl"), "a"

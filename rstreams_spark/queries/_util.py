@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -15,7 +16,9 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     The returned HANDLE (a lazy plan — no rows, no scan results) is
     memoized per session, keyed by the file's absolute path + mtime +
-    size: ``spark.read.parquet`` re-lists the file and re-reads the
+    size (for a parquet directory: the max mtime and summed size over
+    everything under it, so an in-place rewrite of one part file is a
+    new key): ``spark.read.parquet`` re-lists the file and re-reads the
     parquet footer on every call, ~0.14 s of driver-side work per
     table PER QUERY BUILD (r13; a 7-table TPC-H build paid ~1 s
     before any job ran). This is schema/listing metadata reuse — the
@@ -35,8 +38,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         cache = {}
         spark._rstreams_table_cache = cache
     try:
-        st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+        key = _stat_key(path)
     except OSError:
         key = None  # non-local/odd path: fall through uncached
     if key is not None and key in cache:
@@ -47,6 +49,22 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key is not None:
         cache[key] = df
     return df
+
+
+def _stat_key(path: str) -> tuple:
+    """(abspath, mtime_ns, size) of a file; for a directory the max
+    mtime_ns and summed size over the directory and everything under
+    it — its own stat does not change when a part file inside is
+    rewritten in place."""
+    st = os.stat(path)
+    mtime, size = st.st_mtime_ns, st.st_size
+    if stat.S_ISDIR(st.st_mode):
+        for root, dirs, files in os.walk(path):
+            for n in dirs + files:
+                est = os.stat(os.path.join(root, n))
+                mtime = max(mtime, est.st_mtime_ns)
+                size += est.st_size
+    return (os.path.abspath(path), mtime, size)
 
 
 def epoch(col: Column) -> Column:

@@ -12,6 +12,9 @@ from pyspark.sql import SparkSession
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
+# generated classes Spark keeps compiled per JVM (see get_spark)
+CODEGEN_CACHE_ENTRIES = 2048
+
 
 def _default_driver_mem() -> str:
     """Driver heap default: 48g (sf1 broadcasts OOM at 8g) clamped to
@@ -48,6 +51,13 @@ def get_spark(
     query restarted from a checkpoint keeps the count it was started
     with (Spark restores it from the offset log), whatever the
     session says.
+
+    Spark's codegen cache holds ``CODEGEN_CACHE_ENTRIES`` (2048)
+    generated classes, above the whole catalog's ~1,120, so each class
+    compiles once per JVM. At Spark's default of 100, evicted in use
+    order, every repeated pass of the 17 TPC-H headliners (~205
+    classes) recompiled ~200 of them. A retained class costs ~44 KB of
+    heap and metaspace; ``codegen_stats`` reads the compile count.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -80,6 +90,20 @@ def get_spark(
         # (rows × row-width per worker)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.sql.session.timeZone", "UTC")
+        # Spark's compiled-code cache (one entry per generated class,
+        # keyed by its source; static, so it must be set before the
+        # JVM compiles anything) holds 100 classes by default and
+        # evicts the least recently used. One pass of the 17 TPC-H
+        # headliners generates ~205 distinct classes and the whole
+        # catalog ~1,120, so at 100 a repeated pass finds every class
+        # evicted and recompiles it with Janino: ~200 compiles of
+        # 12-16 ms each per TPC-H pass at sf0.1, 1,516 (15 s) on a
+        # second full-catalog pass at sf0.01, against 10 at 2048.
+        # CODEGEN_CACHE_ENTRIES holds the whole catalog's working set:
+        # after two full-catalog passes the retained classes cost
+        # 35 MB of heap and 10 MB of metaspace more than 100 did
+        # (~44 KB per entry, so ~90 MB if all 2048 ever fill)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # local mode: ONE JVM hosts the driver AND all executor
         # threads — 8g starved 32 concurrent tasks plus broadcast
         # builds at sf1 (notEnoughMemoryToBuildAndBroadcastTable).
@@ -113,6 +137,17 @@ def get_spark(
         # not compute, set the trigger time (PERF.md)
         spark.conf.set(SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
     return spark
+
+
+def codegen_stats(spark: SparkSession) -> dict:
+    """Whole-stage and expression codegen work so far in this JVM:
+    ``compiles`` (Janino compilations, i.e. codegen cache misses) and
+    ``ms`` (their total wall time). Take the difference of two reads
+    to cost a stretch of work."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return {"compiles": int(compiles.getCount()), "ms": round(nanos / 1e6, 1)}
 
 
 def gc_hygiene(spark: SparkSession) -> None:

@@ -12,8 +12,6 @@ per Kafka partition.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -80,9 +78,3 @@ def to_json_bytes_schema(example: dict) -> str:
     )
     return fields
 
-
-def _self_test() -> None:
-    assert to_json_bytes_schema({"a": 1, "b": 1.5, "c": "x"}) == (
-        "a bigint, b double, c string"
-    )
-    assert json.loads('{"k": 1}') == {"k": 1}

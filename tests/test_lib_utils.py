@@ -367,6 +367,34 @@ def test_table_handle_memo_and_rewrite_invalidation(spark, tmp_path):
     assert c.count() == 7
 
 
+def test_table_handle_memo_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """A part file rewritten in place inside a parquet directory leaves
+    the directory's own stat unchanged; queries/_util.t folds the
+    entries' max mtime and summed size into its key, so the session
+    serves the new rows instead of a stale handle. (A stale handle
+    keeps the old file length: Spark's scan split ends there, and the
+    row groups of the longer new file that start past it are dropped
+    without an error.)"""
+    import time as _time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rstreams_spark.queries._util import t
+
+    d = tmp_path / "sfY"
+    table_dir = d / "documents.parquet"
+    table_dir.mkdir(parents=True)
+    part = table_dir / "part-00000.parquet"
+    pq.write_table(pa.table({"doc_id": list(range(5))}), part)
+    assert t(spark, str(d), "documents").count() == 5
+    dir_stat = table_dir.stat()
+    _time.sleep(0.01)  # ensure a distinct mtime_ns even on coarse fs
+    pq.write_table(pa.table({"doc_id": list(range(1000))}), part, row_group_size=100)
+    assert table_dir.stat().st_mtime_ns == dir_stat.st_mtime_ns
+    assert t(spark, str(d), "documents").count() == 1000
+
+
 def test_expr_cache_reuses_trees_and_keeps_rows(spark):
     """r13: functions/core.expr_cache memoizes constructed Column
     trees per JVM. The minhash signature agg list is built ONCE per

@@ -41,3 +41,25 @@ def test_every_catalog_entry_states_its_contract():
         n for n, f in REGISTRY.items() if "Contract:" not in (f.__doc__ or "")
     ]
     assert missing == []
+
+
+def test_repeated_tpch_pass_recompiles_nothing(spark):
+    """get_spark sizes Spark's codegen cache to the catalog
+    (session.CODEGEN_CACHE_ENTRIES): a second pass of the 17 TPC-H
+    headliners finds every generated class still compiled. At Spark's
+    100-entry default a pass (~200 classes) evicted each class before
+    it came round again, and every pass recompiled ~200 of them."""
+    from bench import HEADLINERS
+    from rstreams_spark.session import codegen_stats
+
+    tpch = [n for n in HEADLINERS if n.startswith("tpch_")]
+    assert len(tpch) == 17
+
+    def one_pass():
+        for name in tpch:
+            REGISTRY[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+
+    one_pass()
+    before = codegen_stats(spark)["compiles"]
+    one_pass()
+    assert codegen_stats(spark)["compiles"] - before < 25

@@ -921,62 +921,6 @@ def test_rocksdb_state_store_restart_carries_state(spark, tmp_path):
     )
 
 
-def test_tws_lag_window_matches_applyinpandas(spark, tmp_path):
-    """transformWithStateInPandas lag buffer (Spark 4.x state API,
-    RocksDB-required) produces the SAME rows as the
-    applyInPandasWithState implementation on the same replay —
-    the forward path proven equivalent to the portable floor.
-    Skips when protobuf (the state-server protocol dependency) is
-    absent; the construction-time guard is still asserted."""
-    import pytest as _pytest
-
-    from rstreams_spark.streaming.state import rocksdb_state
-    from rstreams_spark.streaming.tws import (
-        HAS_TWS_RUNTIME, stream_lag_window_tws,
-    )
-
-    if not HAS_TWS_RUNTIME:
-        stream = files.stream_files(
-            spark, _write_batch(tmp_path, "twsg", [("a", 1, 1.0)]),
-            "json", SCHEMA,
-        )
-        with _pytest.raises(ImportError, match="protobuf"):
-            stream_lag_window_tws(stream, "key", "ts", 2, "v")
-        _pytest.skip("protobuf not installed — tws runtime unavailable")
-
-    rows = [
-        ("a", 0, 1.0), ("a", 1, 2.0), ("a", 2, 3.0), ("a", 5, 4.0),
-        ("b", 1, 7.0), ("b", 4, 8.0),
-    ]
-    path = _write_batch(tmp_path, "tws", rows)
-
-    def collect(factory, name):
-        stream = files.stream_files(spark, path, "json", SCHEMA)
-        out = factory(stream)
-        q = writers.stream_to_memory(out, name, "append")
-        _run(q)
-        return sorted(
-            (r["key"], int(r["ts"].timestamp() - EPOCH.timestamp()),
-             tuple(r["values"]))
-            for r in spark.sql(f"select * from {name}").collect()
-        )
-
-    with rocksdb_state(spark):
-        new = collect(
-            lambda s: stream_lag_window_tws(s, "key", "ts", 2, "v"),
-            "tws_out",
-        )
-    old = collect(
-        lambda s: stateful.stream_lag_window(s, "key", "ts", 2, "v"),
-        "aip_out",
-    )
-    assert new == old
-    assert new == [
-        ("a", 1, (1.0, 2.0)), ("a", 2, (2.0, 3.0)), ("a", 5, (3.0, 4.0)),
-        ("b", 4, (7.0, 8.0)),
-    ]
-
-
 def test_stream_hopping_window(spark, tmp_path):
     path = _write_batch(tmp_path, "hop", [("a", 0, 1), ("a", 1, 2), ("a", 5, 4)])
     stream = files.stream_files(spark, path, "json", SCHEMA)
@@ -992,152 +936,6 @@ def test_stream_hopping_window(spark, tmp_path):
     }
     # events at 0,1 → windows starting -2,0; event at 5 → windows 2,4
     assert got == {-2: 3.0, 0: 3.0, 2: 4.0, 4: 4.0}
-
-
-def test_tws_strat_classify_matches_applyinpandas(spark, tmp_path):
-    """tws strat-classify twin produces the same rows as the
-    applyInPandasWithState classifier over the same candle replay.
-    Guard asserted / parity skipped when protobuf is absent."""
-    import pytest as _pytest
-
-    from rstreams_spark.streaming.state import rocksdb_state
-    from rstreams_spark.streaming.tws import (
-        HAS_TWS_RUNTIME, stream_strat_classify_tws,
-    )
-
-    candle_schema = (
-        "key string, window_start timestamp, open double, close double"
-    )
-    candle_dir = str(tmp_path / "twscandles")
-    spark.createDataFrame(
-        [
-            ("a", EPOCH + dt.timedelta(seconds=0), 1.0, 3.0),
-            ("a", EPOCH + dt.timedelta(seconds=3), 2.0, 2.5),
-            ("a", EPOCH + dt.timedelta(seconds=6), 0.5, 4.0),
-            ("a", EPOCH + dt.timedelta(seconds=9), 9.0, 3.0),
-            ("b", EPOCH + dt.timedelta(seconds=0), 5.0, 6.0),
-            ("b", EPOCH + dt.timedelta(seconds=3), 4.0, 7.0),
-        ],
-        candle_schema,
-    ).write.mode("overwrite").parquet(candle_dir)
-
-    def candle_stream():
-        return spark.readStream.schema(candle_schema).parquet(candle_dir)
-
-    if not HAS_TWS_RUNTIME:
-        with _pytest.raises(ImportError, match="protobuf"):
-            stream_strat_classify_tws(candle_stream(), "key", "window_start")
-        _pytest.skip("protobuf not installed — tws runtime unavailable")
-
-    def collect(factory, name):
-        q = writers.stream_to_memory(
-            factory(candle_stream()), name, "append"
-        )
-        _run(q)
-        return sorted(
-            (r["key"],
-             int(r["window_start"].timestamp() - EPOCH.timestamp()),
-             r["strat_class"], r["color"])
-            for r in spark.sql(f"select * from {name}").collect()
-        )
-
-    with rocksdb_state(spark):
-        new = collect(
-            lambda s: stream_strat_classify_tws(s, "key", "window_start"),
-            "tws_strat",
-        )
-    old = collect(
-        lambda s: stateful.stream_strat_classify(s, "key", "window_start"),
-        "aip_strat",
-    )
-    assert new == old
-    assert ("a", 3, "inside", "green") in new
-    assert ("a", 9, "up", "red") in new
-
-
-def test_tws_latest_per_key_matches_changelog(spark, tmp_path):
-    """tws Table-changelog twin converges to the same latest row per
-    key as the JVM update-mode aggregation."""
-    import pytest as _pytest
-
-    from rstreams_spark.streaming.state import rocksdb_state
-    from rstreams_spark.streaming.tws import (
-        HAS_TWS_RUNTIME, stream_latest_per_key_tws,
-    )
-
-    path = _write_batch(
-        tmp_path, "twstbl", [("a", 1, 10), ("a", 5, 50), ("b", 2, 20)]
-    )
-
-    if not HAS_TWS_RUNTIME:
-        stream = files.stream_files(spark, path, "json", SCHEMA)
-        with _pytest.raises(ImportError, match="protobuf"):
-            stream_latest_per_key_tws(stream, "key", "ts", "v")
-        _pytest.skip("protobuf not installed — tws runtime unavailable")
-
-    stream = files.stream_files(spark, path, "json", SCHEMA)
-    with rocksdb_state(spark):
-        q = writers.stream_to_memory(
-            stream_latest_per_key_tws(stream, "key", "ts", "v"),
-            "tws_tbl", "update",
-        )
-        _run(q)
-    # last update per key is the converged changelog row
-    latest = {}
-    for r in spark.sql("select * from tws_tbl").collect():
-        cur = latest.get(r["key"])
-        cand = (r["ts"], r["v"])
-        if cur is None or cand > cur:
-            latest[r["key"]] = cand
-    assert {k: v[1] for k, v in latest.items()} == {"a": 50.0, "b": 20.0}
-    assert {k: int(v[0].timestamp() - EPOCH.timestamp())
-            for k, v in latest.items()} == {"a": 5, "b": 2}
-
-
-def test_tws_gap_detect_matches_applyinpandas(spark, tmp_path):
-    """tws event-time-timer gap detection emits the same silent-key
-    rows as the GroupStateTimeout implementation on the same replay."""
-    import pytest as _pytest
-
-    from rstreams_spark.streaming.state import rocksdb_state
-    from rstreams_spark.streaming.tws import (
-        HAS_TWS_RUNTIME, stream_gap_detect_tws,
-    )
-
-    src = tmp_path / "twsgap_src"
-    src.mkdir()
-
-    def write_file(name, rows):
-        with open(src / name, "w") as f:
-            for k, s in rows:
-                ts = (EPOCH + dt.timedelta(seconds=s)).strftime(
-                    "%Y-%m-%dT%H:%M:%S"
-                )
-                f.write(json.dumps({"key": k, "ts": ts, "v": 1.0}) + "\n")
-
-    write_file("b0.json", [("a", 0), ("a", 2), ("b", 1)])
-
-    if not HAS_TWS_RUNTIME:
-        stream = files.stream_files(spark, str(src), "json", SCHEMA)
-        with _pytest.raises(ImportError, match="protobuf"):
-            stream_gap_detect_tws(stream, "key", "ts", gap_seconds=5)
-        _pytest.skip("protobuf not installed — tws runtime unavailable")
-
-    stream = files.stream_files(spark, str(src), "json", SCHEMA)
-    with rocksdb_state(spark):
-        q = writers.stream_to_memory(
-            stream_gap_detect_tws(stream, "key", "ts", gap_seconds=5),
-            "tws_gap", "append",
-        )
-        q.processAllAvailable()
-        write_file("b1.json", [("a", 60)])
-        q.processAllAvailable()
-        q.stop()
-    got = {
-        (r["key"], int(r["last_seen"].timestamp() - EPOCH.timestamp()))
-        for r in spark.sql("select * from tws_gap").collect()
-    }
-    assert got == {("b", 1)}
 
 
 def test_stream_budget_sample_matches_batch_on_hash_order_replay(spark, tmp_path):
