@@ -3,7 +3,7 @@
 
 SF ?= /root/testdata/sf0.01
 
-.PHONY: test oracle bench bench-check smoke examples plans scaling sf1 sf10 sf30 verify probes bucketed-bench cc-decomp
+.PHONY: test oracle bench bench-check smoke examples plans scaling sf1 sf10 sf30 verify probes bucketed-bench profile
 
 # the full drive recipe (.claude/skills/verify/SKILL.md) in one
 # command: driver contract -> full oracle gate replica -> pytest
@@ -30,12 +30,15 @@ scaling:
 bucketed-bench:
 	python tools/bucketed_bench.py
 
-# dedup_clusters stage isolation across the decades
-cc-decomp:
-	python tools/cc_decomp.py
+# where each named query's seconds go (build, jobs, executor,
+# shuffle, Python workers), one JSON line per query from Spark's
+# event log: make profile Q="tpch_q8 dedup_clusters" SF=<sf dir>
+profile:
+	python tools/query_profile.py $(SF) $(Q)
 
 test:
 	python -m pytest tests/ -x -q
+	python3 perfbench/test_eventlog.py
 
 oracle:
 	python tools/oracle_check.py $(SF)

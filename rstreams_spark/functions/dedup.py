@@ -240,10 +240,10 @@ def minhash_signature_np(
     invariant 22). The JVM form evaluates num_perm pmod expressions
     and updates num_perm+1 agg buffers PER SHINGLE ROW — the dominant
     per-trigger cost of the streaming minhash gate (1.65 s of a
-    ~4.3 s trigger at 50k docs — tools/gate_minhash_decomp.py); here
-    each Arrow batch computes the whole (rows × num_perm) permutation
-    block in ~3·num_perm vector ops and reduces per-doc with one
-    cython groupby-min.
+    ~4.3 s trigger at 50k docs — PERF.md, "Round 11: the minhash
+    ingest gate"); here each Arrow batch computes the whole
+    (rows × num_perm) permutation block in ~3·num_perm vector ops and
+    reduces per-doc with one cython groupby-min.
 
     Exactness: the base hash stays the JVM md5 ``hash64`` (computed
     in-plan before the kernel); the permutation algebra

@@ -76,10 +76,7 @@ def get_spark(
         # its shuffles and state stores use spark.sql.shuffle.partitions
         # instead: one partition per core (see the docstring), fixed
         # per query by its checkpoint.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "256"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -148,8 +148,8 @@ def minhash_index_fps(
     so it is provably a dup before any signature work runs: on real
     ingest traffic the dup mass is dominated by exact copies, and
     each one skips the whole shingle→64-permutation→band→verify
-    pipeline (the measured 85%+ of per-trigger cost —
-    tools/gate_minhash_decomp.py).
+    pipeline (the measured 85%+ of per-trigger cost — PERF.md,
+    "Round 11: the minhash ingest gate").
 
     Docs BELOW the shingle order are excluded on purpose: their
     shingle set is empty, the minhash gate scores them 0/0 → no
@@ -244,7 +244,6 @@ def minhash_dedup_batch(
     id_col: str = "doc_id",
     tau: float = MINHASH_DEDUP_TAU,
     index_fps: DataFrame | None = None,
-    use_np_signature: bool = True,
 ) -> DataFrame:
     """One microbatch of near-dup suppression against a static LSH
     index: signature + bands for the ARRIVING docs only, candidate
@@ -263,8 +262,7 @@ def minhash_dedup_batch(
     fingerprint-less path while exact-copy traffic (the dominant dup
     mass on real firehoses) skips the expensive stages."""
     from ..functions.dedup import (
-        doc_shingles, lsh_band_rows, minhash_signature,
-        minhash_signature_np,
+        doc_shingles, lsh_band_rows, minhash_signature_np,
     )
     from ..queries.dedupq import BANDS, NUM_PERM
 
@@ -291,20 +289,15 @@ def minhash_dedup_batch(
             .localCheckpoint(eager=False)
         )
     sh = doc_shingles(batch, text_col, MINHASH_SHINGLE_N, id_col=id_col)
-    # both signature shapes are row-identical (pinned); the Arrow
-    # kernel frees JVM agg threads for the rest of the trigger and
-    # measured slightly ahead at bench batch sizes (PERF.md r11 A/B).
+    # the Arrow kernel (row-identical to the JVM aggregation, pinned)
+    # frees JVM agg threads for the rest of the trigger and measured
+    # slightly ahead at bench batch sizes (PERF.md r11 A/B).
     # NO hash set here (r11): verify sets are recomputed below for
     # CANDIDATE docs only — after the fp pre-gate candidates are the
     # rare case, so collecting per-doc hash sets for every arrival
     # was the signature stage's dead weight
-    sig = (
-        minhash_signature_np(sh, NUM_PERM, id_col=id_col,
-                             with_hash_set=False)
-        if use_np_signature
-        else minhash_signature(sh, NUM_PERM, id_col=id_col,
+    sig = minhash_signature_np(sh, NUM_PERM, id_col=id_col,
                                with_hash_set=False)
-    )
     bands = lsh_band_rows(sig, NUM_PERM, BANDS, id_col=id_col)
     cands = (
         bands.join(index_bands, ["band_idx", "band_key"])
@@ -509,7 +502,7 @@ def _cell_dup_ids_np(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Arrival ids with ANY same-cell index cosine ≥ tau, as one
-    cell-grouped Arrow stage — the gate twin of the batch family's
+    cell-cogrouped Arrow stage — the gate twin of the batch family's
     ``bucketed_topk_np`` (r10). Bit-exact to the join+fold form it
     replaces: the bipartite dot block accumulates DIM-SEQUENTIALLY
     (the zip_with/aggregate fold's add order) and divides by the
@@ -519,101 +512,34 @@ def _cell_dup_ids_np(
     which drives the gate end-to-end against an independent JVM
     join+fold model). Arrivals chunk in-kernel (1024 rows) so
     the block stays ≤ chunk × SEMANTIC_BUCKET_CAP doubles per task
-    regardless of arrival skew into one cell."""
+    regardless of arrival skew into one cell.
+
+    ``cogroup`` needs each side clustered by cell independently, so
+    an index table WRITTEN bucketed by cell satisfies its side with
+    zero exchange and each trigger shuffles only the arriving batch
+    (plan-pinned in tests/test_plans.py); a plain index is shuffled
+    with the arrivals (PERF.md, "One embedding-gate kernel")."""
     import numpy as np
     import pandas as pd
 
     from ..functions.similarity import stack_f64
 
-    a_tag = arrivals.select(
-        F.col("cell").alias("__r"), F.lit(True).alias("__is_a"),
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
-        F.col("v_norm").alias("__n"),
-    )
-    i_tag = indexed.select(
-        F.col("cell").alias("__r"), F.lit(False).alias("__is_a"),
-        F.col("index_id").alias("__id"),
-        F.col("index_emb").alias("__v"),
-        F.col("index_norm").alias("__n"),
-    )
-
-    def gate(key, pdf):
-        am = pdf["__is_a"].to_numpy()
-        apdf, ipdf = pdf[am], pdf[~am]
-        if not len(apdf) or not len(ipdf):
-            return pd.DataFrame({id_col: []}).astype({id_col: "int64"})
-        pids = ipdf["__id"].to_numpy()
-        P = stack_f64(list(ipdf["__v"]), pids, "_cell_dup_ids_np")
-        pn = ipdf["__n"].to_numpy(dtype=np.float64)
-        out = []
-        for lo in range(0, len(apdf), 1024):
-            sub = apdf.iloc[lo:lo + 1024]
-            ids = sub["__id"].to_numpy()
-            V = stack_f64(list(sub["__v"]), ids, "_cell_dup_ids_np")
-            if V.shape[1] != P.shape[1]:
-                raise ValueError(
-                    f"_cell_dup_ids_np: arrival dims {V.shape[1]} != "
-                    f"index dims {P.shape[1]} in cell {key} — arrivals "
-                    "must match the index embedding dimensionality"
-                )
-            vn = sub["__n"].to_numpy(dtype=np.float64)
-            acc = np.zeros((len(ids), len(pids)))
-            for d in range(V.shape[1]):
-                acc += V[:, d, None] * P[None, :, d]
-            cos = acc / (vn[:, None] * pn[None, :])
-            out.append(ids[(cos >= tau).any(axis=1)])
-        dup = np.concatenate(out) if out else np.array([], dtype=np.int64)
-        return pd.DataFrame({id_col: dup})
-
-    return (
-        a_tag.unionByName(i_tag)
-        .groupBy("__r")
-        .applyInPandas(gate, f"{id_col} bigint")
-    )
-
-
-def _cell_dup_ids_np_cogroup(
-    arrivals: DataFrame,
-    indexed: DataFrame,
-    tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cogroup-shaped twin of ``_cell_dup_ids_np`` for BUCKETED index
-    lakes (r10 verdict item 7): the union→groupBy shape must
-    re-shuffle BOTH sides every trigger (a union discards the
-    children's partitioning), while ``cogroup`` requires each side
-    clustered by the key independently — an index table WRITTEN
-    bucketed by cell satisfies its side with ZERO exchange, so each
-    trigger shuffles only the arriving batch (plan-pinned in
-    tests/test_plans.py; same math, same chunking, row-identical —
-    tools/bucketed_dedup_bench.py measures the delta)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.similarity import stack_f64
-
-    def gate(apdf, ipdf):
+    def gate(key, apdf, ipdf):
         if not len(apdf) or not len(ipdf):
             return pd.DataFrame({id_col: []}).astype({id_col: "int64"})
         pids = ipdf["index_id"].to_numpy()
-        P = stack_f64(
-            list(ipdf["index_emb"]), pids, "_cell_dup_ids_np_cogroup"
-        )
+        P = stack_f64(list(ipdf["index_emb"]), pids, "_cell_dup_ids_np")
         pn = ipdf["index_norm"].to_numpy(dtype=np.float64)
         out = []
         for lo in range(0, len(apdf), 1024):
             sub = apdf.iloc[lo:lo + 1024]
             ids = sub[id_col].to_numpy()
-            V = stack_f64(
-                list(sub[vec_col]), ids, "_cell_dup_ids_np_cogroup"
-            )
+            V = stack_f64(list(sub[vec_col]), ids, "_cell_dup_ids_np")
             if V.shape[1] != P.shape[1]:
                 raise ValueError(
-                    f"_cell_dup_ids_np_cogroup: arrival dims "
-                    f"{V.shape[1]} != index dims {P.shape[1]} — "
-                    "arrivals must match the index embedding "
-                    "dimensionality"
+                    f"_cell_dup_ids_np: arrival dims {V.shape[1]} != "
+                    f"index dims {P.shape[1]} in cell {key} — arrivals "
+                    "must match the index embedding dimensionality"
                 )
             vn = sub["v_norm"].to_numpy(dtype=np.float64)
             acc = np.zeros((len(ids), len(pids)))

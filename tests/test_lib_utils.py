@@ -175,6 +175,37 @@ def test_stateless_collapse_detector():
     assert _collapsed([(0.0, 1, 0), (0.0, 1, 0), (0.0, 1, 0)])
 
 
+def test_query_profile_one_row_per_query_and_no_log_left(tmp_path):
+    """``tools/query_profile.py`` in a fresh process: one JSON row for
+    the named query, folded from a real event log, and the log's
+    temporary directory is gone when the process exits."""
+    import os
+    import subprocess
+    import sys
+
+    from conftest import SF_SMOKE
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_CPUS="2",
+               SPARK_GRAFT_DRIVER_MEM="1g")
+    p = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "query_profile.py"),
+         SF_SMOKE, "tpch_q6"],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    rows = [json.loads(line) for line in p.stdout.splitlines()
+            if line.startswith("{")]
+    assert [r["query"] for r in rows] == ["tpch_q6"]
+    (row,) = rows
+    assert row["jobs"] >= 1
+    assert row["exec_s"] > 0
+    assert row["failed_tasks"] == 0
+    assert os.listdir(tmp) == []  # the event-log directory is gone
+
+
 def _run_bench_parent(tmp_path, inner_src: str) -> tuple[str, str]:
     """Run bench.py's parent against a stub inner script; returns
     (stdout, stderr). No Spark involved."""

@@ -447,17 +447,17 @@ def test_cogroup_gate_inherits_bucketed_index_layout(spark, tmp_path):
     clustered by cell INDEPENDENTLY, so a semantic index written
     bucketed by cell satisfies its side with zero exchange — each
     trigger shuffles only the arriving batch (r10 verdict item 7:
-    the union→groupBy kernel shape re-shuffles BOTH sides because a
+    a union→groupBy kernel shape re-shuffled BOTH sides because a
     union discards child partitioning). Pins: 1 exchange for the
-    cogroup plan over the bucketed index (arrivals only) vs 2 for
-    plain; row-identical dup sets across all three shapes."""
+    gate over the bucketed index (arrivals only) vs 2 for plain;
+    row-identical dup sets over both layouts."""
     from pyspark.sql import functions as F
     from rstreams_spark.functions.similarity import l2_norm, rankable_norm
     from rstreams_spark.queries._util import t as load
     from rstreams_spark.queries.dedupq import COSINE_TAU, ivf_assign_np
     from rstreams_spark.sinks.writers import write_bucketed
     from rstreams_spark.streaming.dedup import (
-        _cell_dup_ids_np, _cell_dup_ids_np_cogroup, embedding_index,
+        _cell_dup_ids_np, embedding_index,
     )
 
     vecs = (
@@ -482,17 +482,14 @@ def test_cogroup_gate_inherits_bucketed_index_layout(spark, tmp_path):
     )
     try:
         bkt = spark.table("idx_cell_bkt")
-        union_df = _cell_dup_ids_np(arrivals, indexed_plain, COSINE_TAU)
-        cg_plain = _cell_dup_ids_np_cogroup(
-            arrivals, indexed_plain, COSINE_TAU)
-        cg_bkt = _cell_dup_ids_np_cogroup(arrivals, bkt, COSINE_TAU)
+        cg_plain = _cell_dup_ids_np(arrivals, indexed_plain, COSINE_TAU)
+        cg_bkt = _cell_dup_ids_np(arrivals, bkt, COSINE_TAU)
         # count BEFORE executing: an executed AQE plan's formatted
         # output repeats each exchange in its initial+final sections
         assert plans.count_shuffles(cg_bkt) == 1      # arrivals only
         assert plans.count_shuffles(cg_plain) == 2    # both sides
-        base = sorted(r["vec_id"] for r in union_df.collect())
+        base = sorted(r["vec_id"] for r in cg_plain.collect())
         assert len(base) > 0  # exact copies of index vectors are dups
-        assert sorted(r["vec_id"] for r in cg_plain.collect()) == base
         assert sorted(r["vec_id"] for r in cg_bkt.collect()) == base
     finally:
         spark.sql("drop table if exists idx_cell_bkt")

@@ -86,7 +86,7 @@ STANDING_NOTES = [
     "  ngram_novelty 15.4 s (sf10→sf30 2.7× on 3× data — linear",
     "  token work); dedup_clusters 46.6 s (2.8× on 3×; edges",
     "  2.88M → 9.48M = ×3.3 with the CC stage ×2.1 — sublinear in",
-    "  edges, counted in PERF.md's cc_decomp table);",
+    "  edges, counted in PERF.md's round-10 dedup_clusters table);",
     "  semantic_clusters 12.6 s (2.6× on 3× vectors);",
     "  ivf_topk_shuffle 8.7 s (2.0× on 3× — candidate pairs grow",
     "  ×9 under fixed cells, absorbed by the bucket-grouped Arrow",
