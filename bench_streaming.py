@@ -7,6 +7,9 @@ pipeline PERF.md's 1.6 M rows/s figure came from.
 
 Standalone: prints ONE JSON line. Also importable — ``measure()`` is
 embedded in bench.py's round artifact so rounds are comparable.
+``python bench_streaming.py --lag-state TOTAL_KEYS KEYS_PER_TRIGGER``
+runs only ``measure_lag_state``: the live lag buffer's trigger time and
+state bytes when a trigger touches that many of the state's keys.
 """
 
 from __future__ import annotations
@@ -171,11 +174,13 @@ def measure_stateful(spark, rows_per_batch: int = STATEFUL_ROWS_PER_BATCH,
                      repeats: int = REPEATS) -> dict:
     """Throughput of the Arrow-stateful path (applyInPandasWithState
     lag buffer over 100 keys) — the honest Python-side number to set
-    against the JVM windowed-agg rate. The remaining ~6× gap is
-    Arrow transfer + state round-trips (the per-row Python loop that
-    used to cap this at ~0.8 M rows/s is gone — buffer slots are numpy
-    slices now); operators that CAN be JVM
-    aggregations should be (and in this engine are).
+    against the JVM windowed-agg rate. This is the few-large-groups
+    case: the 100 keys share at most 64 key groups, so per-group
+    overhead is small, and the gap to the JVM rate is PySpark's Arrow
+    conversion both ways. A 2M-row batch costs the 4 workers ~10
+    CPU-s, of which the group function is under 0.2 s (PERF.md,
+    "stream_lag_window keeps its state per key group"); operators that
+    CAN be JVM aggregations should be (and in this engine are).
 
     Uses ``rate-micro-batch`` (fixed rows/batch), not ``rate``: with
     an offered rate above capacity the plain rate source's backlog
@@ -210,6 +215,114 @@ def measure_stateful(spark, rows_per_batch: int = STATEFUL_ROWS_PER_BATCH,
         "stateful_run_batches": [r[1] for r in results],
         "stateful_batches": med[1],
     }
+
+
+def _write_lag_files(src: str, total_keys: int, keys_per_trigger: int,
+                     rows_per_key: int, triggers: int, seed: int) -> None:
+    """File 0 carries one tick for each of ``total_keys`` long keys;
+    files 1..``triggers`` each carry ``rows_per_key`` ticks for
+    ``keys_per_trigger`` keys drawn at random without replacement."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    os.makedirs(src)
+    for i in range(triggers + 1):
+        if i == 0:
+            keys = np.arange(total_keys, dtype=np.int64)
+            ts = np.zeros(total_keys, dtype=np.int64)
+        else:
+            active = rng.choice(total_keys, keys_per_trigger, replace=False)
+            keys = np.repeat(active.astype(np.int64), rows_per_key)
+            ts = i * 1_000_000 + np.tile(np.arange(rows_per_key), keys_per_trigger)
+        tbl = pa.table({
+            "key": keys,
+            "ts": pa.array(ts * 1_000_000, pa.timestamp("us", tz="UTC")),
+            "v": rng.random(len(keys)),
+        })
+        pq.write_table(tbl, os.path.join(src, f"part-{i:04d}.parquet"))
+
+
+def _state_bytes(ckpt: str) -> dict[int, int]:
+    """Bytes of the state store's files per version (``<v>.delta`` and
+    ``<v>.snapshot`` over every partition of every operator)."""
+    import re
+
+    out: dict[int, int] = {}
+    for root, _dirs, names in os.walk(os.path.join(ckpt, "state")):
+        for name in names:
+            m = re.fullmatch(r"(\d+)\.(delta|snapshot)", name)
+            if m:
+                v = int(m.group(1))
+                out[v] = out.get(v, 0) + os.path.getsize(os.path.join(root, name))
+    return out
+
+
+def measure_lag_state(spark, total_keys: int, keys_per_trigger: int,
+                      rows_per_key: int = 10, triggers: int = 8,
+                      warm: int = 2, seed: int = 0) -> dict:
+    """Per-trigger time and state-store bytes of ``stream_lag_window``
+    (lag 2, one value column, ``long`` keys) when a trigger touches
+    ``keys_per_trigger`` of the ``total_keys`` keys the state holds.
+
+    The key-group state rewrites every key of each group a trigger
+    touches, so a sparse stream (few keys per trigger out of many in
+    the state) pays for all of them; a dense one (``keys_per_trigger``
+    near ``total_keys``, as in ``stream_ticks``) pays only for keys it
+    would have touched anyway. The first file seeds every key and is
+    not timed, nor are the next ``warm`` triggers. Reports the median
+    and maximum trigger time, the median bytes the state store wrote
+    per timed trigger (delta files, and snapshots its maintenance
+    thread took), the state directory's size at the end, and the
+    state store's memory after the last trigger."""
+    import shutil
+    import tempfile
+
+    from rstreams_spark.sources.files import stream_files
+    from rstreams_spark.streaming.stateful import stream_lag_window
+
+    work = tempfile.mkdtemp(prefix="bench_lag_state_")
+    src, ckpt = os.path.join(work, "src"), os.path.join(work, "ckpt")
+    try:
+        _write_lag_files(src, total_keys, keys_per_trigger, rows_per_key,
+                         triggers + warm, seed)
+        ticks = stream_files(spark, src, "parquet",
+                             "key bigint, ts timestamp, v double",
+                             max_files_per_trigger=1)
+        q = (
+            stream_lag_window(ticks, "key", "ts", 2, "v")
+            .writeStream.format("noop").outputMode("append")
+            .option("checkpointLocation", ckpt).start()
+        )
+        try:
+            q.processAllAvailable()
+            progress = [json.loads(p.json) for p in q.recentProgress]
+        finally:
+            q.stop()
+        by_version = _state_bytes(ckpt)
+        ran = [p for p in progress if p["numInputRows"]]
+        timed = ran[1 + warm:]
+        secs = sorted(p["durationMs"]["triggerExecution"] / 1e3 for p in timed)
+        # a batch's state version is its id + 1
+        written = sorted(by_version.get(p["batchId"] + 1, 0) for p in timed)
+        state = ran[-1]["stateOperators"][0]
+        return {
+            "total_keys": total_keys,
+            "keys_per_trigger": keys_per_trigger,
+            "state_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+            "timed_triggers": len(timed),
+            "seed_trigger_s": ran[0]["durationMs"]["triggerExecution"] / 1e3,
+            "trigger_p50_s": secs[(len(secs) - 1) // 2],
+            "trigger_max_s": secs[-1],
+            "state_bytes_per_trigger_p50": written[(len(written) - 1) // 2],
+            "state_dir_bytes": sum(by_version.values()),
+            "state_rows": state["numRowsTotal"],
+            "state_rows_updated_last": state["numRowsUpdated"],
+            "state_memory_bytes": state["memoryUsedBytes"],
+        }
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 # Ingest near-dup gates (the 100 TB door): docs/vectors per second
@@ -362,10 +475,24 @@ def measure_dedup_gates(spark, sf_dir: str | None = None,
 
 
 def main() -> None:
+    import argparse
+
     from rstreams_spark.session import get_spark
 
-    spark = get_spark("bench-streaming")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--lag-state", nargs=2, type=int, metavar=("TOTAL_KEYS", "KEYS_PER_TRIGGER"),
+        help="run only measure_lag_state over this many keys in the state "
+             "and keys per trigger",
+    )
+    ap.add_argument("--partitions", type=int,
+                    help="spark.sql.shuffle.partitions (default: the executor slots)")
+    args = ap.parse_args()
+    spark = get_spark("bench-streaming", shuffle_partitions=args.partitions)
     spark.sparkContext.setLogLevel("ERROR")
+    if args.lag_state:
+        print(json.dumps(measure_lag_state(spark, *args.lag_state)))
+        return
     out = measure(spark)
     out.update(measure_stateful(spark))
     out.update(measure_dedup_gates(spark))

@@ -2,10 +2,18 @@
 
 ``stream_lag_window`` is the live counterpart of the reference's
 ``lag_window`` (src/window.rs:9-40): per-key buffer of the last N
-values, emitting the buffer for every arriving row once full. State
-is the per-key buffer (bounded at N rows), partitioned by key across
-executors and checkpointed — exactly what the reference's KV store
-holds, made distributed and fault-tolerant.
+values, emitting the buffer for every arriving row once full. Its
+state is kept per KEY GROUP, not per key: a key belongs to group
+``pmod(hash(key), KEY_GROUPS)``, and one group's state holds the
+buffers of all its keys, so each trigger makes at most
+``KEY_GROUPS`` Python calls (one more for NULL keys, which take a
+group of their own; PySpark's per-call conversion cost, not the
+kernel, set the per-key version's trigger time). The price is that a
+trigger rewrites the whole state of every group it touches: the
+grain assumes a trigger carries most of the state's keys (see
+``stream_lag_window``). The groups are partitioned across executors
+and checkpointed — what the reference's KV store holds, made
+distributed and fault-tolerant.
 
 ``stream_latest_per_key`` is the reference ``Table`` changelog
 (src/table.rs:15-44) as an update-mode streaming aggregation.
@@ -28,6 +36,85 @@ __all__ = [
     "stream_skip", "stream_cycle", "stream_take_while",
 ]
 
+# Key groups of stream_lag_window's state. A checkpoint pins it: its
+# blobs record the count, and a key's group is a function of it, so
+# changing it would route keys away from their buffers.
+KEY_GROUPS = 64
+# The grouping value of key group i, so a key's group is
+# _GROUP_IDS[pmod(hash(key), 64)]: the smallest non-negative int whose
+# Spark `hash` h (the Murmur3 the state shuffle partitions by) has
+# pmod(h, 64) = i and pmod(h, 315) = rev6(i), i's six bits reversed.
+# Over N state partitions the groups then spread as evenly as 64 can
+# for every N = m * 2^k with m dividing 315 and k <= 6 (2, 3, 4, 5, 6,
+# 7, 8, 9, 10, 12, 14, 16, 20, 24, 28, 32, 36, 40, 48, 56, 64, 72, 80,
+# 96, ...): a partition holds at most ceil(64 / N) groups. For N
+# dividing 64, group i lands on partition i mod N, the partition a
+# per-key grouping gives each of its keys. Grouping by i itself would
+# hash the key twice: 0..63 fall 11/16/16/21 over 4 partitions.
+# Pinned, like KEY_GROUPS, by every checkpoint.
+_GROUP_IDS = (
+    22362, 24714, 7354, 781, 13472, 10717, 14160, 11697,
+    35895, 22566, 37333, 7326, 40276, 17993, 11409, 1815,
+    3454, 2513, 24998, 25788, 2406, 21225, 10927, 23445,
+    13514, 3806, 2941, 35703, 879, 20794, 40463, 6862,
+    2260, 59380, 4156, 3971, 3223, 12296, 2725, 29670,
+    13176, 83216, 417, 1265, 19000, 46053, 13973, 4853,
+    45479, 20605, 8465, 33227, 33070, 11780, 41927, 386,
+    5976, 344, 11075, 18965, 326, 12157, 5670, 50933,
+)
+# NULL keys take a group of their own, so every other group's integral
+# keys cross into pandas as int64: a NULL among them would widen the
+# column to float64, which rounds keys past 2^53 (invariant 22).
+_NULL_GROUP = -1
+_KEY_GROUPS_META = b"key_groups"
+
+
+def _lag_state_decode(blob: bytes, names: list[str]):
+    """One key group's state blob -> (keys, slots): the keys as a
+    numpy array in the form pandas gives the batch's keys, and one
+    float row per slot name, NaN = empty.
+    Raises ValueError when the blob was written with another key-group
+    count or another slot layout (lag or value-column count)."""
+    import numpy as np
+    import pyarrow as pa
+
+    tbl = pa.ipc.open_stream(pa.py_buffer(blob)).read_all()
+    meta = (tbl.schema.metadata or {}).get(_KEY_GROUPS_META)
+    if meta != str(KEY_GROUPS).encode():
+        raise ValueError(
+            "stream_lag_window: the checkpoint's state was written with "
+            f"{meta.decode() if meta else 'no'} key groups, this code "
+            f"routes keys to {KEY_GROUPS}; its keys would land in other "
+            "groups' state, so start from a fresh checkpoint"
+        )
+    if tbl.column_names[1:] != names:
+        raise ValueError(
+            "stream_lag_window: the checkpoint's state holds slots "
+            f"{tbl.column_names[1:]}, this query expects {names} (lag or "
+            "value columns changed); start from a fresh checkpoint"
+        )
+    keys = tbl.column(0).to_pandas().to_numpy()
+    return keys, np.stack([tbl.column(s).to_numpy() for s in names])
+
+
+def _lag_state_encode(key: str, keys, slots, names: list[str]) -> bytes:
+    """Arrow IPC stream bytes of one key group's state: the key column
+    (its native type; the NULL-key group's is whatever pandas held),
+    one nullable double column per slot (NULL = empty), and KEY_GROUPS
+    in the schema metadata."""
+    import numpy as np
+    import pyarrow as pa
+
+    cols = [pa.array(keys, from_pandas=True)]
+    cols += [pa.array(np.ascontiguousarray(v), from_pandas=True) for v in slots]
+    tbl = pa.table(cols, names=[key, *names]).replace_schema_metadata(
+        {_KEY_GROUPS_META: str(KEY_GROUPS).encode()}
+    )
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, tbl.schema) as w:
+        w.write_table(tbl)
+    return sink.getvalue().to_pybytes()
+
 
 def stream_lag_window(
     df: DataFrame,
@@ -42,20 +129,55 @@ def stream_lag_window(
     ``value_col`` may be one column name or a list; the buffer holds
     the last ``lag`` double values PER column. Output: one
     ``values_<col> array<double>`` per column (``values`` for a single
-    column), oldest → newest. Rows within a microbatch are processed
-    in global ``ts`` order across Arrow chunks; buffers carry across
-    batches via GroupState — bounded at ``lag`` × columns doubles per
-    key.
+    column), oldest → newest. Rows of a key are processed in ``ts``
+    order across Arrow chunks; buffers carry across batches — bounded
+    at ``lag`` × columns doubles per key.
+
+    State is kept per key group, ``pmod(hash(key), KEY_GROUPS)``:
+    one Python call per group and trigger orders the group's rows by
+    (key, time) and computes every key's windows with numpy gathers.
+    The groups are labelled (``_GROUP_IDS``) so that a key lands on
+    the state partition a per-key grouping would give it when the
+    partition count N divides 64, and no partition holds more than
+    ceil(64 / N) groups for N = m * 2^k with m dividing 315 (6, 12, 24,
+    48, 96, ...). At most 64 partitions (65 with NULL keys) hold
+    groups, so more state partitions than that leave the rest idle for
+    this operator; other counts (11, 100, ...) split the groups
+    unevenly.
+
+    The grain assumes a trigger carries most of the state's keys, as
+    ``stream_ticks`` does (~1,000 symbols, nearly all in every
+    trigger). A trigger rewrites the whole state of every group it
+    touches, keys without rows included: once it carries more than a
+    few dozen keys it touches nearly every group, so its Python work
+    and the state-store bytes it checkpoints grow with all the keys
+    the state holds, not with the keys it carries. The per-key version
+    wrote only the touched keys. A sparse stream (many keys in the
+    state, few per trigger) therefore checkpoints far more per trigger
+    than it did; its triggers ran faster up to 1M keys held and
+    level at ~3M (1,000 keys a trigger).
+    ``bench_streaming.py --lag-state`` measures both, and
+    PERF.md ("stream_lag_window keeps its state per key group") has
+    the numbers.
+
+    A group's state is one ``binary`` field: Arrow IPC stream bytes of
+    a table with the key in its native type and one nullable double
+    column per buffer slot (NULL = empty), with ``KEY_GROUPS`` in the
+    schema metadata — decode it with ``pyarrow.ipc.open_stream``. A
+    blob written under another key-group count raises ValueError
+    naming both counts rather than re-routing keys. A checkpoint
+    written by the earlier per-key version (state keyed by the key,
+    scalar slot fields) fails on restart with Spark's state-schema
+    error (STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE); start such a query
+    from a fresh checkpoint.
 
     Only plain columns cross the Python boundary (CLAUDE.md invariant
     25): event time goes in as epoch micros, each buffer slot comes
     back as its own double column, and the JVM rebuilds ``ts`` and the
-    arrays. State is ``lag`` nullable double fields per column (NULL =
-    empty slot), not an array: array state regenerates its encoder on
-    every trigger. A checkpoint written by the earlier array-state
-    version fails on restart with STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE;
-    start such a query from a fresh checkpoint. A NULL ``ts`` sorts
-    last in its group and comes out as a NULL ``ts``.
+    arrays. NULL keys take a group of their own, so no other group's
+    integral keys are widened to float64 by pandas (invariant 22). A
+    NULL key is its own key; a NULL ``ts`` sorts last in its
+    key and comes out as a NULL ``ts``.
 
     NULL **or NaN** values cannot ride the live buffer: NULL marks an
     empty state slot, and pandas stores SQL NULL as NaN in float
@@ -70,13 +192,14 @@ def stream_lag_window(
     # disambiguates per source column
     names = ["values"] if len(cols) == 1 else [f"values_{c}" for c in cols]
     # internal column names: a prefix no input column starts with, so
-    # the time and slot columns never collide with the key or a value
+    # the internal columns never collide with the key or a value
     pre = "_"
     while any(c.startswith(pre) for c in (key, *cols)):
         pre += "_"
-    us = f"{pre}us"
+    us, kg, blob = f"{pre}us", f"{pre}kg", f"{pre}state"
     slots = [[f"{pre}v{i}_{j}" for j in range(lag)] for i in range(len(cols))]
     flat = [s for per_col in slots for s in per_col]
+    ncols = len(cols)
     # preserve the key's NATIVE dtype: the old unconditional
     # cast-to-string cost ~20% throughput on long keys (string sort
     # in the group-split + string Arrow transfer both ways) and
@@ -85,16 +208,16 @@ def stream_lag_window(
     out_schema = f"`{key}` {key_type}, {us} bigint, " + ", ".join(
         f"{s} double" for s in flat
     )
-    state_schema = ", ".join(f"{s} double" for s in flat)
 
     def fn(
         group_key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         # a group's microbatch may span multiple Arrow chunks —
         # concat BEFORE sorting (invariant 7)
-        whole = concat_time_ordered([pdf for pdf in pdfs if len(pdf)], us)
-        if not len(whole):
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if not chunks:
             return
+        whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
         # NULL values cannot ride this operator: NULL marks an empty
         # state slot. Fail with the contract instead of emitting a
         # buffer with holes; filter or coalesce NULL values upstream.
@@ -102,7 +225,9 @@ def stream_lag_window(
         # NULL as NaN in float columns, so the two cannot be told
         # apart at this layer — a legitimate NaN double (which the
         # batch twin would buffer) is rejected with the same message.
-        vals = [whole[c].to_numpy(dtype=float, na_value=np.nan) for c in cols]
+        vals = np.stack(
+            [whole[c].to_numpy(dtype=float, na_value=np.nan) for c in cols]
+        )
         for c, v in zip(cols, vals):
             if np.isnan(v).any():
                 raise ValueError(
@@ -112,48 +237,75 @@ def stream_lag_window(
                     "folds NaN and SQL NULL together in float "
                     "columns); filter or coalesce upstream"
                 )
-        # state: lag slots per column, oldest first, empty (NULL)
-        # slots on the left
-        prev = (
-            np.array(state.get, dtype=float).reshape(len(cols), lag)
-            if state.exists
-            else np.full((len(cols), lag), np.nan)
+        keys = whole[key].to_numpy()
+        t = whole[us].to_numpy()
+        if state.exists:
+            prev_keys, prev = _lag_state_decode(state.get[0], flat)
+        else:
+            prev_keys, prev = keys[:0], np.empty((len(flat), 0))
+        s, n = len(prev_keys), len(whole)
+        # one code per distinct key over the state's keys and the
+        # batch's (the NULL group's one key gets a code too)
+        codes, uniq = pd.factorize(
+            np.concatenate([prev_keys, keys]), use_na_sentinel=False
         )
-        b = lag - int(np.isnan(prev[0]).sum())  # buffered values
-        n = len(whole)
-        # vectorized sliding buffer: row p's buffer is allv[b+p-lag+1 :
-        # b+p+1], so slot j of every emitted row is one contiguous
-        # slice of allv
-        start = max(lag - 1 - b, 0)  # first batch row with a full buffer
-        first = b + start - lag + 1
-        m = max(n - start, 0)  # a key can still be filling its buffer
-        out = {
-            key: np.repeat(group_key[0], m),
-            us: whole[us].to_numpy()[start:],
-        }
-        new_state = []
-        for i, v in enumerate(vals):
-            allv = np.concatenate([prev[i, lag - b:], v])
-            for j, s in enumerate(slots[i]):
-                out[s] = allv[first + j : first + j + m]
-            tail = allv[-lag:].tolist()
-            new_state += [None] * (lag - len(tail)) + tail
-        state.update(tuple(new_state))
-        if m > 0:
-            # copy=False: no block consolidation, the slices go as-is
-            yield pd.DataFrame(out, copy=False)
+        sc, bc = codes[:s], codes[s:]
+        u = len(uniq)
+        # each key's segment of the buffer: its lag state slots (NaN
+        # where empty), then its batch rows in time order
+        order = np.lexsort((t, bc))
+        cnt = np.bincount(bc, minlength=u)
+        seg = np.arange(u) * lag + np.cumsum(cnt) - cnt
+        buf = np.full((ncols, u * lag + n), np.nan)
+        # state rows are (column, slot) pairs: (ncols * lag, s) ->
+        # (ncols, s, lag), one lag-wide run per state key
+        buf[:, seg[sc][:, None] + np.arange(lag)] = (
+            prev.reshape(ncols, lag, s).transpose(0, 2, 1)
+        )
+        pos = np.arange(n) + (bc[order] + 1) * lag  # sorted row -> buffer
+        buf[:, pos] = vals[:, order]
+        # a row emits once its window's oldest slot is filled; slot j
+        # of every emitted row is one gather
+        first = pos - lag + 1
+        emit = ~np.isnan(buf[0, first])
+        first = first[emit]
+        # new state: the last lag slots of every key's segment,
+        # untouched keys (state only) included
+        tail = (seg + cnt)[:, None] + np.arange(lag)
+        state.update((
+            _lag_state_encode(
+                key, uniq,
+                buf[:, tail].transpose(0, 2, 1).reshape(ncols * lag, u), flat,
+            ),
+        ))
+        if not len(first):
+            return
+        rows = order[emit]
+        out = {key: keys[rows], us: t[rows]}
+        for i, per_col in enumerate(slots):
+            for j, name in enumerate(per_col):
+                out[name] = buf[i, first + j]
+        # copy=False: no block consolidation, the gathers go as-is
+        yield pd.DataFrame(out, copy=False)
 
     # NULL event time crosses as a sentinel past every valid timestamp
     # (Spark's max is year 9999, ~2.5e17 µs): the int64 column stays
     # non-nullable, sorts NULLs last, and comes back NULL below
     null_us = F.lit(1 << 62)
+    group = F.element_at(
+        F.array(*map(F.lit, _GROUP_IDS)),
+        F.pmod(F.hash(key), F.lit(KEY_GROUPS)) + 1,
+    )
     return (
         df.select(
-            key, F.coalesce(F.unix_micros(ts), null_us).alias(us), *cols
+            key,
+            F.coalesce(F.unix_micros(ts), null_us).alias(us),
+            *cols,
+            F.when(F.col(key).isNull(), F.lit(_NULL_GROUP)).otherwise(group).alias(kg),
         )
-        .groupBy(key)
+        .groupBy(kg)
         .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+            fn, out_schema, f"{blob} binary", "append", GroupStateTimeout.NoTimeout
         )
         .select(
             key,

@@ -212,6 +212,158 @@ def test_stream_lag_window_compiles_nothing_after_first_trigger(spark, tmp_path)
     assert compiles[1] <= 1 and compiles[2:] == [0, 0, 0], compiles
 
 
+def test_stream_lag_window_many_keys_per_group(spark, tmp_path):
+    """5,000 ``long`` keys share the 64 key groups (~78 keys a group,
+    at most two ticks a key per trigger), plus one NULL key. The keys
+    are consecutive past 2^53, where float64 cannot tell neighbours
+    apart: a NULL in a group's key column would widen it to float on
+    its way into pandas and merge buffers, so the NULL key must keep
+    to a group of its own. Lag 2 and lag 3, two value columns kept
+    aligned."""
+    src = tmp_path / "many"
+    src.mkdir()
+    big = 1 << 60
+    ids = [big + i for i in range(5000)]
+    null_key = -1  # stands in for NULL when sorting; no real key is -1
+    v = lambda k, s: ((null_key if k is None else k - big) * 10 + s)  # noqa: E731
+    triggers = [
+        [(k, 0) for k in ids] + [(None, 0)],
+        [(k, 1) for k in ids[:3000]] + [(None, 1), (None, 2)],
+        [(k, s) for k in ids[:1000] for s in (2, 3)]
+        + [(k, 2) for k in ids[3000:]] + [(None, 3)],
+    ]
+    stream = files.stream_files(
+        spark, str(src), "json", "key bigint, ts timestamp, v double"
+    ).withColumn("w", -F.col("v"))
+    queries = {
+        lag: writers.stream_to_memory(
+            stateful.stream_lag_window(stream, "key", "ts", lag, ["v", "w"]),
+            f"many_lag{lag}_out", "append",
+        )
+        for lag in (2, 3)
+    }
+    try:
+        for n, rows in enumerate(triggers):
+            _append_events(src, f"part-{n}.json", rows, v)
+            for q in queries.values():
+                q.processAllAvailable()
+    finally:
+        for q in queries.values():
+            q.stop()
+    ticks = [
+        (null_key if k is None else k, s, float(v(k, s)))
+        for rows in triggers for k, s in rows
+    ]
+    for lag in queries:
+        rows = spark.sql(f"select * from many_lag{lag}_out").collect()
+        got = sorted(
+            (null_key if r["key"] is None else r["key"],
+             int(r["ts"].timestamp() - EPOCH.timestamp()), tuple(r["values_v"]))
+            for r in rows
+        )
+        assert got == _lag_pairs(ticks, lag), lag
+        assert all(
+            r["values_w"] == [-x for x in r["values_v"]] for r in rows
+        ), lag
+
+
+def test_key_groups_keep_per_key_state_partitions(spark):
+    """Key group i's grouping value hashes, under the Murmur3 Spark's
+    state shuffle partitions by, to i mod 64, and a key's group is its
+    own hash mod 64: with N state partitions dividing 64, every key
+    lands on the partition grouping by the key itself gives it, and
+    each partition holds 64 / N groups. For partition counts that do
+    not divide 64 but are an odd divisor of 315 times a power of two,
+    no partition holds more than ceil(64 / N) groups."""
+    import math
+    from collections import Counter
+
+    ids = spark.createDataFrame(list(enumerate(stateful._GROUP_IDS)), "i int, v int")
+    hashes = [r["h"] for r in ids.orderBy("i").select(F.hash("v").alias("h")).collect()]
+    assert len(hashes) == stateful.KEY_GROUPS
+    assert [h % stateful.KEY_GROUPS for h in hashes] == list(range(stateful.KEY_GROUPS))
+    for n in (3, 5, 6, 7, 9, 10, 12, 20, 24, 48, 96):
+        most = max(Counter(h % n for h in hashes).values())
+        assert most == math.ceil(stateful.KEY_GROUPS / n), n
+    table = F.array(*map(F.lit, stateful._GROUP_IDS))
+    keys = spark.range(1000).select(F.concat(F.lit("S"), F.col("id").cast("string")).alias("k"))
+    group = F.element_at(table, F.pmod(F.hash("k"), F.lit(stateful.KEY_GROUPS)) + 1)
+    for n in (2, 4, 8, 16, 32, 64):
+        moved = keys.where(
+            F.pmod(F.hash(group), F.lit(n)) != F.pmod(F.hash("k"), F.lit(n))
+        )
+        assert moved.count() == 0, n
+
+
+def test_stream_lag_window_per_key_checkpoint_fails_loudly(spark, tmp_path):
+    """A checkpoint whose state is keyed by the key itself (the shape
+    of the per-key version: ``groupBy(key)``, one scalar field per
+    slot) cannot be resumed by the key-group operator: Spark's
+    state-schema check stops the query instead of reading it."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _append_events(src, "part-0.json", [("a", 0), ("b", 1)])
+    ckpt = str(tmp_path / "ckpt")
+
+    def per_key(_, pdfs, state):
+        for _pdf in pdfs:
+            pass
+        state.update((0.0, 0.0))
+        yield from ()
+
+    def start(df):
+        return (
+            df.writeStream.format("noop").outputMode("append")
+            .option("checkpointLocation", ckpt).start()
+        )
+
+    stream = files.stream_files(spark, str(src), "json", SCHEMA)
+    q = start(
+        stream.groupBy("key").applyInPandasWithState(
+            per_key, "key string, _us bigint, _v0_0 double, _v0_1 double",
+            "_v0_0 double, _v0_1 double", "append", GroupStateTimeout.NoTimeout,
+        )
+    )
+    _run(q)
+    _append_events(src, "part-1.json", [("a", 2)])
+    q = start(stateful.stream_lag_window(stream, "key", "ts", 2, "v"))
+    try:
+        with pytest.raises(Exception, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_lag_state_blob_pins_key_group_count(monkeypatch):
+    """A key group's state blob records KEY_GROUPS; one written under
+    another count (or another slot layout) fails loudly, naming both,
+    instead of serving buffers to keys routed by a different count."""
+    import numpy as np
+
+    names = ["_v0_0", "_v0_1"]
+    slots = np.array([[np.nan, 1.0], [2.0, 3.0]])
+    blob = stateful._lag_state_encode("key", np.array(["a", None], dtype=object), slots, names)
+    keys, got = stateful._lag_state_decode(blob, names)
+    assert list(keys) == ["a", None]
+    np.testing.assert_array_equal(got, slots)
+    # integer keys come back exact, never as float64
+    big = np.array([(1 << 60) + 1, (1 << 60) + 2])
+    keys, _ = stateful._lag_state_decode(
+        stateful._lag_state_encode("key", big, slots, names), names
+    )
+    assert keys.dtype == np.int64 and list(keys) == list(big)
+    with pytest.raises(ValueError, match="slots"):
+        stateful._lag_state_decode(blob, names + ["_v0_2"])
+
+    monkeypatch.setattr(stateful, "KEY_GROUPS", 16)
+    other = stateful._lag_state_encode("key", np.array(["a"], dtype=object), slots[:, :1], names)
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match=r"16 key groups.*routes keys to 64"):
+        stateful._lag_state_decode(other, names)
+
+
 def test_stream_interval_join(spark, tmp_path):
     lpath = _write_batch(tmp_path, "l", [("a", 0, 1), ("b", 1, 2), ("c", 50, 3)])
     rpath = _write_batch(tmp_path, "r", [("a", 5, 10), ("b", 40, 20), ("c", 55, 30)])
@@ -1612,40 +1764,60 @@ def test_stream_sanitize_measures_drop_and_fail(spark):
 
 
 def test_checkpoint_keeps_state_partition_count(spark, tmp_path):
-    """Start stream_lag_window at 3 state partitions, stop it, and
-    restart it from the same checkpoint in a session set to 5: the
-    query stays at 3, and the per-key buffers carry over with no lost
-    or duplicated pair."""
+    """Start stream_lag_window at 3 state partitions, run two triggers,
+    stop it, and restart it from the same checkpoint in a session set
+    to 5: the query stays at 3, and the per-key buffers carry over with
+    no lost or duplicated pair. 300 more keys cover all 64 key groups,
+    so both runs end with one state row per key group."""
     src = tmp_path / "src"
     src.mkdir()
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    v = lambda k, s: ord(k) * 100 + s  # noqa: E731
+    many = [f"k{i:04d}" for i in range(300)]
+    groups = spark.createDataFrame([(k,) for k in many], "key string").select(
+        F.pmod(F.hash("key"), F.lit(stateful.KEY_GROUPS))
+    )
+    assert groups.distinct().count() == stateful.KEY_GROUPS
+    ids = {k: i for i, k in enumerate([*"abcdef", *many])}
+    v = lambda k, s: ids[k] * 10 + s  # noqa: E731
     runs = [
-        (3, [(k, s) for k in "abcde" for s in (0, 1)]),
-        (5, [(k, s) for k in "abcdef" for s in (2, 3)]),
+        (3, [
+            [(k, s) for k in "abcde" for s in (0, 1)] + [(k, 0) for k in many],
+            [(k, 1) for k in many[::2]],
+        ]),
+        (5, [[(k, s) for k in ids for s in (2, 3)]]),
     ]
-    counts = []
-    for n, (parts, rows) in enumerate(runs):
+    files_in = iter(range(3))
+    counts, state_rows = [], []
+    for parts, (first, *more) in runs:
         sess = spark.newSession()
         sess.conf.set(SHUFFLE_PARTITIONS, str(parts))
-        _append_events(src, f"part-{n}.json", rows, v)
+        # each run's first file lands while no query runs
+        _append_events(src, f"part-{next(files_in)}.json", first, v)
         stream = files.stream_files(sess, str(src), "json", SCHEMA)
         q = writers.stream_to_parquet(
             stateful.stream_lag_window(stream, "key", "ts", 2, "v"), out, ckpt
         )
         try:
             q.processAllAvailable()
+            for rows in more:
+                _append_events(src, f"part-{next(files_in)}.json", rows, v)
+                q.processAllAvailable()
             counts.append(
                 {p["stateOperators"][0]["numShufflePartitions"] for p in q.recentProgress}
             )
+            state_rows.append(q.lastProgress["stateOperators"][0]["numRowsTotal"])
         finally:
             q.stop()
     assert counts == [{3}, {3}]
+    assert state_rows == [stateful.KEY_GROUPS] * 2
     got = sorted(
         (r["key"], int(r["ts"].timestamp() - EPOCH.timestamp()), tuple(r["values"]))
         for r in spark.read.parquet(out).collect()
     )
-    ticks = [(k, s, float(v(k, s))) for _, rows in runs for k, s in rows]
+    ticks = [
+        (k, s, float(v(k, s)))
+        for _, triggers in runs for rows in triggers for k, s in rows
+    ]
     assert got == _lag_pairs(ticks)
 
 
