@@ -61,15 +61,6 @@ def count_sortmerge_joins(df: DataFrame) -> int:
     return _count_nodes(df, "SortMergeJoin")
 
 
-def count_shuffled_joins(df: DataFrame) -> int:
-    """Shuffle-distributed joins of either physical flavor: sort-merge
-    or shuffled-hash (the latter skips the sort — right for semi
-    probes where neither side's order is reused)."""
-    return _count_nodes(df, "SortMergeJoin") + _count_nodes(
-        df, "ShuffledHashJoin"
-    )
-
-
 def count_shuffles(df: DataFrame) -> int:
     """Shuffle exchanges only (BroadcastExchange intentionally not
     counted — broadcasts are the cheap alternative to a shuffle)."""

@@ -1137,90 +1137,6 @@ def _ts_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return series.localCheckpoint(eager=False)
 
 
-def _ts_similarity_topk_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-JVM composition of the subsequence search — the parity
-    oracle for the Arrow kernel path (row-level equality pinned in
-    tests/test_operators.py): window slices explode in-plan and every
-    per-window mean/var/distance is a sequential HOF fold. Kept as
-    the bit-exactness reference; the catalog entry rides the kernel
-    (the interpreted folds were ~5.7×/decade on points × W work)."""
-    series = _ts_series(spark, sf_dir)
-    # one-row broadcast query pattern (z-normalized once, driver-free).
-    # The size guard keeps a short query series (< W values) from
-    # producing a null-padded qp whose NULL dists order differently
-    # in Spark (NULLS FIRST) vs DuckDB (NULLS LAST) — no row means
-    # an empty result in BOTH engines instead of a silent divergence.
-    qrow = (
-        series.where(
-            (F.col("user_id") == TSM_QUERY_USER)
-            & (F.size("vals") >= TSM_W)
-        )
-        .select(F.slice("vals", 1, TSM_W).alias("qp"))
-    )
-
-    def _mean(arr):
-        return (
-            F.aggregate(arr, F.lit(0.0), lambda a, x: a + x) / F.lit(float(TSM_W))
-        )
-
-    def _var(arr, mean_col):
-        return (
-            F.aggregate(
-                arr, F.lit(0.0),
-                lambda a, x: a + (x - mean_col) * (x - mean_col),
-            )
-            / F.lit(float(TSM_W))
-        )
-
-    wins = (
-        series.withColumn("__n", F.size("vals"))
-        .where(F.col("__n") >= TSM_W)
-        .select(
-            "user_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("__n") - TSM_W + 1),
-                    lambda i: F.slice(F.col("vals"), i, TSM_W),
-                )
-            ).alias("__p", "w"),
-        )
-        .select("user_id", (F.col("__p") + 1).alias("start_idx"), "w")
-        .crossJoin(F.broadcast(qrow))
-    )
-    # mean/var/std projected as real columns so each fold evaluates
-    # once per row (separate select boundaries; the HOF lambdas below
-    # reference materialized attributes, not expressions)
-    wins = wins.select(
-        "user_id", "start_idx", "w", "qp",
-        _mean(F.col("w")).alias("mw"), _mean(F.col("qp")).alias("mq"),
-    )
-    wins = wins.select(
-        "*",
-        _var(F.col("w"), F.col("mw")).alias("vw"),
-        _var(F.col("qp"), F.col("mq")).alias("vq"),
-    )
-    wins = wins.where((F.col("vw") > 0) & (F.col("vq") > 0))
-    sw, sq = F.sqrt("vw"), F.sqrt("vq")
-    diff = F.zip_with(
-        "w", "qp",
-        lambda a, b: ((a - F.col("mw")) / sw - (b - F.col("mq")) / sq),
-    )
-    dist = F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, d: acc + d * d))
-    top = (
-        wins.select("user_id", "start_idx", dist.alias("dist"))
-        .where(
-            ~((F.col("user_id") == TSM_QUERY_USER) & (F.col("start_idx") == 1))
-        )
-        .orderBy("dist", "user_id", "start_idx")
-        .limit(TSM_K)
-    )
-    wr = Window.orderBy("dist", "user_id", "start_idx")  # <= K rows
-    return top.withColumn("rank", F.row_number().over(wr).cast("long")).select(
-        "user_id", F.col("start_idx").cast("long").alias("start_idx"),
-        "dist", "rank",
-    )
-
-
 def ts_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series subsequence similarity search (the UCR-suite
     shape: z-normalized Euclidean distance between a query pattern
@@ -1234,9 +1150,10 @@ def ts_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (retention-bounded per key, loud in-plan cap); windows never
     explode — each series row enters the Arrow kernel ONCE and the
     sliding-window mean/var/distances compute as dim-sequential
-    numpy accumulations BIT-IDENTICAL to the sequential JVM folds of
-    ``_ts_similarity_topk_jvm`` (same add order, same one-sqrt-at-
-    the-end; the parity twin is row-equality-pinned in tests). The
+    numpy accumulations BIT-IDENTICAL to the oracle's sequential
+    list_reduce folds (same add order, same one-sqrt-at-the-end; the
+    DuckDB twin is row-equality-pinned in tests/test_series_cap.py
+    at sf0.001 and sf0.01). The
     kernel emits only its per-batch top-K, so the global
     ``orderBy().limit(K)`` (distributed TakeOrdered) sees ≤ K rows
     per batch, never points-many rows. The interpreted HOF folds this
@@ -1279,8 +1196,9 @@ def ts_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return empty
     qp = list(qrows[0]["qp"])
     if any(x is None for x in qp):
-        # JVM twin: NULL in the query window → NULL mq/vq → the
-        # (vq > 0) filter drops every row → empty on both engines
+        # SQL fold semantics: NULL in the query window → NULL mq/vq
+        # → the (vq > 0) filter drops every row → empty on both
+        # engines
         return empty
     mq = 0.0
     for x in qp:

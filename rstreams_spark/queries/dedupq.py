@@ -330,7 +330,8 @@ def semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit is multiplicity-stable only on a set of vectors (duplicate
     rows are upstream corruption; dedup_exact is the remedy;
     dup_rows probe class, r7). Pipeline: assign every embedding to its k-means cell via
-    the HIERARCHICAL index (``ivf_fit2``/``ivf_assign2`` — same
+    the HIERARCHICAL index (``_ivf_fit_rows(..., two_level=True)`` /
+    ``_coarse_rows_py`` / ``_assign2_np_rows`` — same
     deterministic seeds and bounded means as the ANN path's flat
     ``ivf_fit``, but every corpus pass routes through a ⌈√cells⌉
     coarse tier, and the assignment is the greedy two-step argmin,
@@ -351,9 +352,9 @@ def semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass per Lloyd round regardless of cell count). The
     pair stage is the grouped numpy kernel ``cosine_pairs_np`` (one
     shuffle on cell, dim-sequential dots — bit-equal to the JVM/
-    oracle folds); the assignment is the Arrow twin
-    ``ivf_assign2_np`` (same cells as the in-plan argmin, 10× less
-    interpreter time). CC is the per-round-checkpointed hybrid
+    oracle folds); the assignment is the Arrow kernel
+    ``_assign2_np_rows`` (the oracle's two-step argmin, cell for
+    cell). CC is the per-round-checkpointed hybrid
     (invariants 10/11).
 
     Contract: vec_id is the vector identity (must be unique — the
@@ -385,7 +386,7 @@ def semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cells ∝ corpus size keeps within-cell pair work LINEAR in n
     # (pairs ≈ n · target/2, not n²/cells): the count() is a parquet
     # footer metadata read, not a data scan. The fit and assignment
-    # route through the ⌈√cells⌉ coarse tier (ivf_fit2/ivf_assign2)
+    # route through the ⌈√cells⌉ coarse tier
     # so per-vector distance work is O(√cells), not O(cells) — the
     # r5 probe showed the flat fit's O(n·cells) passes dominating
     # the decade step once cells grew with n.
@@ -408,8 +409,8 @@ def semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = semantic_cell_count(n)
     # driver-row fit + rows-kernel assignment: the whole index stage
     # is IVF_LLOYD+1 corpus jobs and zero small-table jobs (r8); the
-    # DataFrame wrappers (ivf_fit2/ivf_coarse_groups/ivf_assign2_np)
-    # express the identical math and stay as the parity surface
+    # oracle's _sql_ivf_assign2 is the parity twin (per-vector cells
+    # pinned in tests/test_skew_similarity.py)
     cents_rows = _ivf_fit_rows(emb, cells, True)
     crows, grows = _coarse_rows_py(cents_rows, _n_coarse(cells))
     vecs = _assign2_np_rows(emb.select("vec_id", "embedding"), crows, grows)
@@ -627,37 +628,6 @@ IVF_LLOYD = 2       # deterministic sampled-Lloyd refinement rounds
 IVF_MEAN_CAP = 512  # per-cell member sample for the mean (sorted by id)
 
 
-def _argmin_cell(vec_col: Column) -> Column:
-    """In-plan argmin over the broadcast ``__cents`` struct array:
-    one ``transform`` computes each cell's distance ONCE (the r4
-    ``aggregate``+``when`` fold evaluated ``_l2sq`` twice per cell —
-    condition and struct — doubling the dominant cost of the Lloyd
-    fit), then the native ``array_min`` struct ordering picks
-    (min d2, then min cell) — identical tie-break to the oracle's
-    row_number ORDER BY d2, cell (the array is cell-sorted and cell
-    ids are unique, so lexicographic struct-min ≡ the strict-< fold).
-    """
-    dists = F.transform(
-        F.col("__cents"),
-        lambda c: F.struct(
-            _l2sq(vec_col, c["centroid"]).alias("d2"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    return F.array_min(dists)["cell"]
-
-
-def _ivf_one_row(cents: DataFrame) -> DataFrame:
-    """The whole index as ONE broadcast row: per-vector assignment
-    becomes an argmin fold over the cell-sorted struct array — no
-    corpus shuffle, no collect."""
-    return cents.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("cell"), F.col("centroid")))
-        ).alias("__cents")
-    )
-
-
 def _lloyd_mean(members: DataFrame) -> DataFrame:
     """Per-cell bounded-member mean as ONE traversal of the sorted
     member slice: the fold carries a dims-wide accumulator array and
@@ -686,65 +656,6 @@ def _lloyd_mean(members: DataFrame) -> DataFrame:
     )
 
 
-def _lloyd_mean_np(assigned: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Arrow/numpy twin of the ``collect_list``+``_lloyd_mean`` JVM
-    stage. **NOT wired into the fit — measured and rejected (r7).**
-    The r6 verdict hypothesized the fit's remaining ~2 s was the
-    interpreted mean fold; head-to-head timing (warmed session,
-    3 draws, both SFs) says otherwise — IVF_MEAN_CAP bounds the fold
-    at ≤512×dims adds per cell, so the JVM fold is cheap, and the
-    extra Python stage round trip costs MORE than it saves:
-    semantic_clusters sf0.1 median 3.64 s (JVM) vs 4.56 s (Arrow),
-    sf1 6.55 vs 8.56; ivf_topk sf0.1 1.73 vs 2.18. The fit keeps the
-    JVM fold; this kernel stays as the bit-exact-parity-tested
-    alternative (see PERF.md "Lloyd mean kernel") for regimes where
-    a much larger member cap or dim count would tip the balance —
-    re-measure before wiring it in.
-
-    FP parity is EXACT, same argument as the sibling kernels: the
-    accumulator adds members one at a time in vec_id order with a
-    0.0-init head (``acc = acc + M[i]`` — elementwise across dims,
-    exactly the ``zip_with`` add), the member list caps at
-    IVF_MEAN_CAP *after* the vec_id sort (== ``slice(array_sort(...),
-    1, cap)``), and the division by the capped member count happens
-    once per dim on the identical operands. ``_lloyd_mean`` stays as
-    the all-JVM expression and parity oracle
-    (tests/test_skew_similarity.py asserts row-level equality).
-
-    NULL embeddings raise (the JVM twin would emit a NULL centroid —
-    poison either way; fit callers filter NULLs by contract), and
-    ragged dimensions raise the targeted ``stack_f64`` error."""
-    import numpy as np
-    import pandas as pd
-
-    def mean_kernel(pdf):
-        if pdf[vec_col].isna().any():
-            bad = pdf.loc[pdf[vec_col].isna(), "vec_id"].tolist()[:10]
-            raise ValueError(
-                f"_lloyd_mean_np: NULL embedding(s) reached the Lloyd "
-                f"mean (vec_ids {bad}) — the fit contract excludes "
-                "NULL vectors; filter upstream"
-            )
-        pdf = pdf.sort_values("vec_id").head(IVF_MEAN_CAP)
-        M = stack_f64(list(pdf[vec_col]), pdf["vec_id"].to_numpy(),
-                      "_lloyd_mean_np")
-        acc = np.zeros(M.shape[1], dtype=np.float64)  # the 0.0 head
-        for i in range(M.shape[0]):
-            acc = acc + M[i]
-        return pd.DataFrame(
-            {
-                "cell": [int(pdf["cell"].iloc[0])],
-                "centroid": [(acc / float(M.shape[0])).tolist()],
-            }
-        )
-
-    return (
-        assigned.select("vec_id", vec_col, "cell")
-        .groupBy("cell")
-        .applyInPandas(mean_kernel, "cell int, centroid array<double>")
-    )
-
-
 def ivf_fit(emb: DataFrame, cells: int = IVF_CELLS) -> DataFrame:
     """Deterministic, oracle-reproducible IVF centroids (cell,
     centroid): seeds = the ``cells`` corpus vectors with the smallest
@@ -762,10 +673,11 @@ def ivf_fit(emb: DataFrame, cells: int = IVF_CELLS) -> DataFrame:
     extra jobs per round in eager-checkpoint scans + collects of
     cells-row frames — pure orchestration latency (PERF.md). The
     Lloyd mean stays the JVM fold bounded by IVF_MEAN_CAP; assignment
-    stays the Arrow kernel (bit-equal to the in-plan argmin — see its
-    parity note). Beyond a few thousand cells the honest design is
-    the two-level coarse→fine assignment (``ivf_fit2``/
-    ``ivf_assign2``) — same fold, one extra tier.
+    stays the Arrow kernel (bit-equal to the oracle's argmin — see
+    its parity note). Beyond a few thousand cells the honest design
+    is the two-level coarse→fine assignment (``_ivf_fit_rows`` with
+    ``two_level``, as ``semantic_clusters`` runs it) — same fold, one
+    extra tier.
     """
     return _cents_df(emb.sparkSession, _ivf_fit_rows(emb, cells, False))
 
@@ -781,8 +693,8 @@ def _hash64_py(s: str, salt: int = 0) -> int:
 
 def _cents_df(spark: SparkSession, cents_rows: list) -> DataFrame:
     """(cell, centroid) rows → a LocalRelation frame for downstream
-    consumers (broadcast routing, the JVM parity twins). Collecting
-    it back is driver-local — no job."""
+    consumers (the assign kernel, broadcast routing). Collecting it
+    back is driver-local — no job."""
     return spark.createDataFrame(
         [(c, list(v)) for c, v in cents_rows],
         "cell int, centroid array<double>",
@@ -797,8 +709,9 @@ def _ivf_fit_rows(emb: DataFrame, cells: int, two_level: bool) -> list:
     Identical doubles to the r7 frame-per-round form: the collect →
     createDataFrame/closure round-trip is exact (binary doubles), the
     mean fold and its member order are unchanged, and the coarse
-    grouping twin (``_coarse_rows_py``) reproduces the JVM struct-min
-    bit-for-bit (dim-sequential squared-L2, first-min tie-break)."""
+    grouping (``_coarse_rows_py``) reproduces the oracle's
+    row_number-over-(d2, g) argmin bit-for-bit (dim-sequential
+    squared-L2, first-min tie-break)."""
     from ..functions.text import hash64
 
     rows = (
@@ -856,11 +769,14 @@ def _ivf_fit_rows(emb: DataFrame, cells: int, two_level: bool) -> list:
 
 
 def _coarse_rows_py(cents_rows: list, n_coarse: int) -> tuple:
-    """Driver twin of ``ivf_coarse_groups``: coarse seeds = the
-    ``n_coarse`` cells with the smallest (portable-hash(cell), cell),
-    g = enumeration in that order; each cell routes to its nearest
-    coarse centroid by the SAME dim-sequential squared-L2 fold with
-    the first-min (d2, g) tie-break the JVM struct-min uses. Returns
+    """Two-level routing tier over a fitted centroid table, on the
+    driver: coarse seeds = the ``n_coarse`` cells with the smallest
+    (portable-hash(cell), cell), g = enumeration in that order (seeds
+    only — no coarse Lloyd: the tier only ROUTES the fine argmin, and
+    a seed cell lands in its own group, so no group is empty); each
+    cell routes to its nearest coarse centroid by the dim-sequential
+    squared-L2 fold with the first-min (d2, g) tie-break — the
+    oracle's gseed/c2g CTEs (``_sql_ivf_lloyd2``). Returns
     (crows=(cell, centroid, g) sorted by cell, grows=(g, centroid)
     sorted by g). Pure driver work over ≤ SEMANTIC_CELL_MAX rows."""
     import numpy as np
@@ -875,7 +791,7 @@ def _coarse_rows_py(cents_rows: list, n_coarse: int) -> tuple:
     for d in range(C.shape[1]):
         diff = C[:, d, None] - G[None, :, d]
         acc += diff * diff
-    g_idx = np.argmin(acc, axis=1)  # first min == (d2, g) struct-min
+    g_idx = np.argmin(acc, axis=1)  # first min == ORDER BY d2, g
     crows = [
         (cell, cent, int(g_idx[i]))
         for i, (cell, cent) in enumerate(cents_rows)
@@ -883,37 +799,22 @@ def _coarse_rows_py(cents_rows: list, n_coarse: int) -> tuple:
     return crows, grows
 
 
-def ivf_assign(vecs: DataFrame, cents: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Adds the argmin Voronoi ``cell`` column: a single-row
-    broadcast of the centroid array + an in-plan argmin fold per
-    vector — the corpus is never shuffled on and never collected.
-    Argmin ties break toward the smaller cell id (strict <, array is
-    cell-sorted), matching the oracle's row_number ORDER BY d2, cell.
-    """
-    return (
-        vecs.crossJoin(F.broadcast(_ivf_one_row(cents)))
-        .withColumn("cell", _argmin_cell(F.col(vec_col)))
-        .drop("__cents")
-    )
-
-
 def ivf_assign_np(
     vecs: DataFrame, cents: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Arrow/numpy twin of the single-level ``ivf_assign`` — same
-    cells, ~10× less interpreter time (cf. ``ivf_assign2_np``, the
-    two-level variant; same parity argument: dim-sequential squared-
-    L2 accumulation reproduces the JVM/oracle fold bit-for-bit, and
-    numpy's first-min argmin over cell-sorted columns equals the
-    struct-min's (d2, cell) tie-break). The centroid table ships in
-    the closure — bounded by the fit's cell count. NULL embeddings
-    land in the SMALLEST cell id, exactly like the JVM argmin: a
-    NULL vector makes every d2 fold NULL, so the struct-min ties
-    break on cell alone (the DuckDB oracle's ORDER BY d2, cell
-    agrees — all-NULL d2 degenerates to min cell in both engines);
-    a bare float64 stack would instead crash on the ragged batch.
-    ``ivf_assign`` stays as the all-JVM expression and parity
-    oracle."""
+    """Adds the argmin Voronoi ``cell`` column (single-level; the
+    two-level variant is ``_assign2_np_rows``), vectorized inside
+    ``mapInPandas``. Dim-sequential squared-L2 accumulation
+    reproduces the oracle's list_reduce fold bit-for-bit, and numpy's
+    first-min argmin over cell-sorted columns equals the oracle's
+    row_number ORDER BY d2, cell tie-break (``_sql_ivf_assign`` is
+    the parity twin, pinned per vector in
+    tests/test_skew_similarity.py). The centroid table ships in the
+    closure — bounded by the fit's cell count. NULL embeddings land
+    in the SMALLEST cell id (all-NULL d2 degenerates to the cell
+    tie-break; callers filter NULLs by contract, so the oracle never
+    sees them); a bare float64 stack would instead crash on the
+    ragged batch."""
     crows = [
         (int(r["cell"]), list(r["centroid"]))
         for r in cents.select("cell", "centroid").collect()
@@ -989,172 +890,32 @@ def _n_coarse(cells: int) -> int:
     return max(2, math.ceil(math.sqrt(cells)))
 
 
-def ivf_coarse_groups(
-    cents: DataFrame, n_coarse: int
-) -> tuple[DataFrame, DataFrame]:
-    """Two-level routing tier over a fitted centroid table: coarse
-    centroids are the ``n_coarse`` cells with the smallest portable
-    hash of their id (seeds only — no coarse Lloyd: the coarse tier
-    only ROUTES the fine argmin, and a seed cell always lands in its
-    own group, so every group is non-empty by construction), and
-    every cell is assigned to its nearest coarse centroid. Returns
-    (cents + ``g`` column, one-row broadcast frame with the
-    ``__coarse`` struct array)."""
-    from ..functions.text import hash64
-
-    wg = Window.orderBy("__ch", "cell")
-    coarse = (
-        cents.select(
-            "cell", "centroid",
-            hash64(F.col("cell").cast("string")).alias("__ch"),
-        )
-        .orderBy("__ch", "cell")
-        .limit(n_coarse)
-        .select(
-            (F.row_number().over(wg) - 1).alias("g"),
-            F.col("centroid").alias("gcentroid"),
-        )
-    )
-    coarse_one = coarse.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col("g"), F.col("gcentroid").alias("centroid"))
-            )
-        ).alias("__coarse")
-    )
-    dists = F.transform(
-        F.col("__coarse"),
-        lambda c: F.struct(
-            _l2sq(F.col("centroid"), c["centroid"]).alias("d2"),
-            c["g"].alias("g"),
-        ),
-    )
-    cents_g = (
-        cents.crossJoin(F.broadcast(coarse_one))
-        .withColumn("g", F.array_min(dists)["g"])
-        .drop("__coarse")
-    )
-    return cents_g, coarse_one
-
-
-def ivf_assign2(
-    vecs: DataFrame,
-    cents_g: DataFrame,
-    coarse_one: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-level Voronoi assignment: argmin over the ⌈√cells⌉ coarse
-    centroids picks a group, then argmin over that group's cells —
-    O(2√cells) distance folds per vector instead of O(cells), the
-    standard hierarchical-index shape (IVF coarse quantizer /
-    hierarchical k-means). Greedy, not exact — a vector near a group
-    boundary may land in a neighboring group's cell — which SemDeDup
-    tolerates by design (any deterministic partition works; the
-    oracle mirrors the identical two-step argmin). The coarse pick
-    g* is LET-BOUND via a one-element ``transform`` so it evaluates
-    exactly once per row: a ``withColumn("__g", …)`` would be
-    projection-collapsed into the fine filter's lambda and re-run
-    the coarse argmin per filtered ELEMENT (CLAUDE.md invariant 5 —
-    measured 5× slower before the binding)."""
-    cells_one = cents_g.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("cell"), F.col("centroid"), F.col("g")))
-        ).alias("__cells")
-    )
-    gdists = F.transform(
-        F.col("__coarse"),
-        lambda c: F.struct(
-            _l2sq(F.col(vec_col), c["centroid"]).alias("d2"),
-            c["g"].alias("g"),
-        ),
-    )
-    gstar = F.array_min(gdists)["g"]
-    # let-binding: transform over a 1-element array binds g* to a
-    # lambda VARIABLE (evaluated once), which the nested filter
-    # references as a bound value, not an expression to re-evaluate
-    cell = F.element_at(
-        F.transform(
-            F.array(gstar),
-            lambda g: F.array_min(
-                F.transform(
-                    F.filter(F.col("__cells"), lambda c: c["g"] == g),
-                    lambda c: F.struct(
-                        _l2sq(F.col(vec_col), c["centroid"]).alias("d2"),
-                        c["cell"].alias("cell"),
-                    ),
-                )
-            )["cell"],
-        ),
-        1,
-    )
-    return (
-        vecs.crossJoin(F.broadcast(coarse_one))
-        .crossJoin(F.broadcast(cells_one))
-        .withColumn("cell", cell)
-        .drop("__coarse", "__cells")
-    )
-
-
-def ivf_assign2_np(
-    vecs: DataFrame,
-    cents_g: DataFrame,
-    coarse_one: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/numpy twin of ``ivf_assign2`` — identical assignment,
-    ~10× less wall on the fit's hot path. The interpreted HOF
-    distance folds are the catalog's biggest cost center (r5
-    verdict): each fold step is a per-element lambda dispatch, so a
-    corpus pass burns minutes of interpreter time computing what is
-    arithmetically a (batch × cells × dims) array op. This variant
-    runs the same math vectorized inside ``mapInPandas``:
-
-    - FP parity is EXACT, not approximate: squared-L2 accumulates
-      dimension-sequentially (``acc += sq[..., d]`` in a d-loop over
-      vectorized (row, cell) planes), reproducing the JVM/oracle
-      fold's add order bit-for-bit (0.0-init head is exact; float32
-      inputs cast to float64 before subtract on both paths).
-    - The argmin ties break to the FIRST minimum (numpy argmin) over
-      cell-sorted columns ≡ the struct-min's (d2, cell) order; the
-      coarse pick is greedy-then-fine exactly like ``ivf_assign2``
-      (a boundary vector lands in the same neighboring group).
-    - The index ships in the CLOSURE (centroid tables are ≤
-      SEMANTIC_CELL_MAX rows by the fit's clamp — a bounded collect,
-      like the eval-gram gate), so no per-row struct-array
-      duplication crosses Arrow.
-    - NULL embeddings reproduce the JVM twin's degenerate argmin: a
-      NULL vector makes every distance fold NULL, so the coarse
-      struct-min ties break to the smallest g and the fine argmin to
-      the smallest cell in that group (the float64 stack would
-      otherwise crash on the ragged batch; the oracle's ORDER BY
-      d2, g / d2, cell over all-NULL d2 degenerates identically).
-
-    ``ivf_assign2`` stays as the all-JVM expression of the same
-    semantics and the parity oracle for this path
-    (tests/test_skew_similarity.py asserts row-level equality).
-    """
-    crows = [
-        (int(r["cell"]), list(r["centroid"]), int(r["g"]))
-        for r in cents_g.select("cell", "centroid", "g").collect()
-    ]
-    crows.sort(key=lambda t: t[0])
-    grows = [
-        (int(g["g"]), list(g["centroid"]))
-        for g in coarse_one.collect()[0]["__coarse"]
-    ]
-    grows.sort(key=lambda t: t[0])
-    return _assign2_np_rows(vecs, crows, grows, vec_col)
-
-
 def _assign2_np_rows(
     vecs: DataFrame, crows: list, grows: list, vec_col: str = "embedding"
 ) -> DataFrame:
-    """``ivf_assign2_np`` body over PRE-COLLECTED index rows —
-    ``crows`` = (cell, centroid, g) sorted by cell, ``grows`` =
-    (g, centroid) sorted by g. The driver-orchestrated fit keeps
-    both tables as plain rows between rounds, so a Lloyd round is
-    ONE corpus job (no coarse-group broadcast builds, no collects of
-    checkpointed frames)."""
+    """Two-level Voronoi assignment over PRE-COLLECTED index rows
+    (``crows`` = (cell, centroid, g) sorted by cell, ``grows`` =
+    (g, centroid) sorted by g, as ``_coarse_rows_py`` returns them):
+    argmin over the ⌈√cells⌉ coarse centroids picks a group, then
+    argmin over that group's cells — the standard hierarchical-index
+    shape. Greedy, not exact: a vector near a group boundary may land
+    in a neighboring group's cell, which SemDeDup tolerates (any
+    deterministic partition works) and the oracle mirrors
+    (``_sql_ivf_assign2``'s gpick/asg CTEs, the parity twin pinned
+    per vector in tests/test_skew_similarity.py).
+
+    - FP parity is EXACT: squared-L2 accumulates dim-sequentially
+      with a 0.0 head, the oracle's list_reduce add order; float32
+      inputs cast to float64 before the subtract on both sides.
+    - Argmin ties break to the FIRST minimum over cell- and g-sorted
+      columns ≡ ORDER BY d2, cell / d2, g.
+    - The index ships in the CLOSURE (≤ SEMANTIC_CELL_MAX rows by
+      the fit's clamp); the driver-orchestrated fit keeps both
+      tables as plain rows between rounds, so a Lloyd round is ONE
+      corpus job.
+    - NULL embeddings land in the smallest g's smallest cell (all-
+      NULL d2 degenerates to the id tie-breaks; callers filter NULLs
+      by contract) instead of crashing the float64 stack."""
     import numpy as np
 
     C = np.array([c for _, c, _ in crows], dtype=np.float64)
@@ -1166,7 +927,7 @@ def _assign2_np_rows(
     def _d2(V: "np.ndarray", M: "np.ndarray") -> "np.ndarray":
         # dim-sequential accumulation: for every (row, centroid)
         # pair the adds happen in dim order with a 0.0 head —
-        # bit-identical to the JVM fold / DuckDB list_reduce
+        # bit-identical to the DuckDB list_reduce
         acc = np.zeros((V.shape[0], M.shape[0]))
         for d in range(V.shape[1]):
             diff = V[:, d, None] - M[None, :, d]
@@ -1192,7 +953,7 @@ def _assign2_np_rows(
                 V = stack_f64(
                     list(pdf.loc[valid, vec_col]),
                     pdf.loc[valid, "vec_id"].to_numpy(),
-                    "ivf_assign2_np",
+                    "ivf assign (two-level)",
                 )
                 dg = _d2(V, G)
                 gstar = g_ids[np.argmin(dg, axis=1)]
@@ -1205,23 +966,6 @@ def _assign2_np_rows(
             yield pdf
 
     return vecs.mapInPandas(run, schema)
-
-
-def ivf_fit2(emb: DataFrame, cells: int) -> DataFrame:
-    """``ivf_fit`` with two-level Lloyd assignment: identical seeds
-    and identical bounded means, but every corpus pass (each Lloyd
-    round AND the caller's final assignment) routes through the
-    ⌈√cells⌉ coarse tier — O(n·√cells) total distance work instead
-    of O(n·cells). With cells ∝ n (semantic_cell_count) that turns
-    the fit from ~quadratic to O(n^1.5) locally and O(n) once the
-    SEMANTIC_CELL_MAX clamp binds; this is what makes
-    corpus-proportional SemDeDup cells viable at 100 TB.
-
-    Driver-orchestrated like ``ivf_fit`` (r8): one corpus job per
-    Lloyd round; the per-round coarse grouping runs on the driver
-    (``_coarse_rows_py`` — bit-equal twin of ``ivf_coarse_groups``)
-    instead of building broadcast frames that each cost a job."""
-    return _cents_df(emb.sparkSession, _ivf_fit_rows(emb, cells, True))
 
 
 def ivf_topk(
@@ -1953,7 +1697,7 @@ def _sql_ivf_lloyd() -> tuple[str, str]:
 _SQL_IVF_ROUNDS, _SQL_IVF_FINAL = _sql_ivf_lloyd()
 
 # shared CTE chain: deterministic centroid fit + per-vector argmin
-# cell assignment — the DuckDB twin of ivf_fit/ivf_assign, used by
+# cell assignment — the DuckDB twin of ivf_fit/ivf_assign_np, used by
 # both the ANN ranking (ivf_topk, fixed IVF_CELLS) and the SemDeDup
 # bucketer (semantic_clusters, corpus-sized cell count via a LIMIT
 # subquery mirroring semantic_cell_count's integer algebra)
@@ -1986,11 +1730,12 @@ def _sql_ivf_assign(limit_expr: str) -> str:
 
 def _sql_ivf_lloyd2(nc_expr: str) -> tuple[str, str]:
     """CTE chain for the TWO-LEVEL Lloyd rounds — the DuckDB twin of
-    ivf_fit2: per round, coarse seeds (smallest-hash cells), cell→
-    coarse assignment, per-vector coarse pick, fine argmin among the
-    picked group's cells, then the same bounded sequential-fold
-    mean. Every argmin is a row_number over (d2, id) — identical
-    tie-breaks to Spark's struct array_min."""
+    ``_ivf_fit_rows(..., two_level=True)``: per round, coarse seeds
+    (smallest-hash cells), cell→coarse assignment, per-vector coarse
+    pick, fine argmin among the picked group's cells, then the same
+    bounded sequential-fold mean. Every argmin is a row_number over
+    (d2, id) — identical tie-breaks to the Arrow kernels' first-min
+    argmin."""
     parts = []
     prev = "cents0"
     for i in range(IVF_LLOYD):
@@ -2048,8 +1793,9 @@ def _sql_ivf_lloyd2(nc_expr: str) -> tuple[str, str]:
 
 def _sql_ivf_assign2(cells_expr: str, nc_expr: str) -> str:
     """Two-level twin of _sql_ivf_assign — identical seeds and means,
-    hierarchical routing for every corpus pass (the ivf_fit2 /
-    ivf_assign2 shape)."""
+    hierarchical routing for every corpus pass (the shape
+    ``semantic_clusters`` runs: ``_ivf_fit_rows`` two-level →
+    ``_coarse_rows_py`` → ``_assign2_np_rows``)."""
     rounds, final = _sql_ivf_lloyd2(nc_expr)
     return f"""hashed as (
           select vec_id, embedding, {sql_h64("vec_id::varchar")} as h

@@ -170,15 +170,17 @@ REP_DUP3_NUM, REP_DUP3_DEN = 9, 50
 
 
 def _qrep_stats_np(staged: DataFrame) -> DataFrame:
-    """Arrow/numpy twin of the run-length-fold repetition stats —
-    identical integer (doc_id, __nc, w_total, w_distinct, top2_chars,
-    dup3_chars) rows (row-equality-pinned against the JVM fold in
-    tests/test_kernel_parity.py). The JVM form runs TWO interpreted
-    ``F.aggregate`` run-length folds (+ two array_sorts) per doc —
-    ~2·|tokens| uncompiled lambda evals with struct rebuilds
-    (invariant 22's seam; the dominant cost at sf10). Here the whole
+    """Arrow/numpy repetition stats: integer (doc_id, __nc, w_total,
+    w_distinct, top2_chars, dup3_chars) rows, the integers the
+    oracle's per-(doc, gram) counts produce (``quality_repetition``
+    is row-equality-pinned against its DuckDB twin in
+    tests/test_kernel_parity.py, corpus and edge docs). The JVM form
+    this replaced (r11) ran TWO interpreted ``F.aggregate``
+    run-length folds (+ two array_sorts) per doc — ~2·|tokens|
+    uncompiled lambda evals with struct rebuilds (invariant 22's
+    seam; the dominant cost at sf10). Here the whole
     Arrow batch vectorizes: one ``pd.factorize`` builds token
-    equality classes (string equality == the JVM/oracle gram-string
+    equality classes (string equality == the oracle's gram-string
     equality, since whitespace-split tokens cannot contain the join
     space), gram keys are integer codes of adjacent class pairs
     (cross-doc boundaries masked), and the per-(doc, gram) counts /
@@ -188,10 +190,9 @@ def _qrep_stats_np(staged: DataFrame) -> DataFrame:
 
     Exactness notes: gram char length = Σ token lengths + (n-1)
     separators, equal for equal gram strings, so taking it from any
-    occurrence matches the fold's length-of-string; top2 = max over
+    occurrence matches the oracle's length(gram); top2 = max over
     distinct 2-grams of count×len; dup3 = Σ over distinct 3-grams
-    with count ≥ 2 of count×len — the run-length fold computes
-    exactly these over the sorted gram array."""
+    with count ≥ 2 of count×len — exactly the oracle's stats CTE."""
     import numpy as np
     import pandas as pd
 
@@ -295,19 +296,14 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: every statistic is doc-LOCAL, so no row leaves its
     document — the whole query is one map-only scan→filter→project
-    with ZERO exchanges (pinned in tests/test_plans.py). Word
-    counts come from size/array_distinct on the token array; the
-    2-/3-gram counts from a run-length fold over the doc's SORTED
-    gram array (array_sort + one F.aggregate pass tracking
-    (prev, run, agg) — equal grams are adjacent after the sort, so
-    closing a run yields that gram's exact count). The r9 A/B vs
-    the previous explode + two-hash-agg plan: 1.24 s vs 3.59 s at
-    sf0.1, row-identical (PERF.md). All numerators/denominators are
+    with ZERO exchanges (pinned in tests/test_plans.py). The word
+    and 2-/3-gram counts come from one Arrow kernel pass per batch
+    (``_qrep_stats_np``). All numerators/denominators are
     exact integers; each output fraction is ONE double division of
     identical integers on both engines, and the keep flag is
     multiplication-only integer algebra — no FP threshold anywhere.
     At 100 TB: embarrassingly parallel, no shuffle at all; cost is
-    O(m log m) per doc in the sort, bounded by document length.
+    bounded by document length.
 
     Contract: NULL/empty text yields zero gram mass and passes no
     Gopher cut; ratios guard zero denominators identically; a ROW is
@@ -315,8 +311,6 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats row (the oracle groups grams under a row number), never a
     merged double-counted group
     """
-    # the r11 Arrow kernel computes the integer stats (the JVM
-    # run-length fold stays as the pinned twin — _qrep_stats_jvm)
     stats = _qrep_stats_np(_qrep_staged(spark, sf_dir)).withColumnsRenamed(
         {"w_total": "__w_total", "w_distinct": "__w_distinct",
          "top2_chars": "__top2_chars", "dup3_chars": "__dup3_chars"}
@@ -325,8 +319,8 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qrep_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, __nc, __toks) staging shared by the kernel and the
-    JVM twin. The per-doc work downstream is ~|tokens| per ROW: when
+    """(doc_id, __nc, __toks) staging, the stats kernel's input.
+    The per-doc work downstream is ~|tokens| per ROW: when
     the scan arrives under-parallel (few files / one row group — the
     local-corpus layout), redistribute the NARROW docs table first;
     on a real multi-file lake layout this is a no-op (measured: sf1
@@ -347,7 +341,7 @@ def _qrep_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qrep_select(stats: DataFrame) -> DataFrame:
-    """Shared final projection: fractions are ONE double division of
+    """Final projection: fractions are ONE double division of
     identical integers on both engines; keep is multiplication-only
     integer algebra (no FP threshold)."""
     w_total = F.greatest(F.col("__w_total"), F.lit(1))
@@ -364,62 +358,6 @@ def _qrep_select(stats: DataFrame) -> DataFrame:
         (F.col("__top2_chars") / F.col("__nc")).alias("top2gram_char_frac"),
         (F.col("__dup3_chars") / F.col("__nc")).alias("dup3gram_char_frac"),
         keep.alias("keep"),
-    )
-
-
-def _qrep_stats_jvm(staged: DataFrame) -> DataFrame:
-    """The retained all-JVM repetition stats (two run-length
-    ``F.aggregate`` folds over sorted gram arrays) — the parity twin
-    the Arrow kernel is row-equality-pinned against, and the
-    documented fallback for inputs that must not cross Arrow."""
-    from ..functions.dedup import grams
-
-    tk = F.col("__toks")
-    zl = F.lit(0).cast("long")
-    ns = F.lit(None).cast("string")
-
-    def _close_chars(acc):
-        # chars of the run being closed: count × gram length; the
-        # initial NULL prev yields NULL, skipped by greatest/coalesce
-        return acc.run.cast("long") * F.length(acc.prev).cast("long")
-
-    def _rl_fold(sorted_col, merge_close, finish):
-        """Run-length fold over a sorted gram array: acc carries the
-        current run (prev gram, run count) plus one agg slot; a new
-        gram closes the previous run through ``merge_close``."""
-        return F.aggregate(
-            sorted_col,
-            F.struct(ns.alias("prev"), F.lit(0).alias("run"),
-                     zl.alias("agg")),
-            lambda acc, x: F.when(
-                x == acc.prev,
-                F.struct(x.alias("prev"), (acc.run + 1).alias("run"),
-                         acc.agg.alias("agg")),
-            ).otherwise(
-                F.struct(x.alias("prev"), F.lit(1).alias("run"),
-                         merge_close(acc).alias("agg"))
-            ),
-            finish,
-        )
-
-    # biggest 2-gram char mass: max over runs of run*len
-    top2 = _rl_fold(
-        F.array_sort(grams(tk, 2)),
-        lambda acc: F.greatest(acc.agg, _close_chars(acc)),
-        lambda acc: F.coalesce(
-            F.greatest(acc.agg, _close_chars(acc)), zl),
-    )
-    # duplicated 3-gram char mass: sum over runs with count ≥ 2
-    _dup_close = lambda acc: acc.agg + F.coalesce(  # noqa: E731
-        F.when(acc.run >= 2, _close_chars(acc)).otherwise(zl), zl)
-    dup3 = _rl_fold(F.array_sort(grams(tk, 3)), _dup_close, _dup_close)
-
-    return staged.select(
-        "doc_id", "__nc",
-        F.size(tk).cast("long").alias("w_total"),
-        F.size(F.array_distinct(tk)).cast("long").alias("w_distinct"),
-        top2.alias("top2_chars"),
-        dup3.alias("dup3_chars"),
     )
 
 

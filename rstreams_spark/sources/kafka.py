@@ -67,14 +67,3 @@ def write_kafka_stream(
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
     )
-
-
-def to_json_bytes_schema(example: dict) -> str:
-    """Helper mirroring the reference's serde derive: build a DDL
-    schema string from an example payload dict."""
-    type_map = {int: "bigint", float: "double", str: "string", bool: "boolean"}
-    fields = ", ".join(
-        f"{k} {type_map.get(type(v), 'string')}" for k, v in example.items()
-    )
-    return fields
-

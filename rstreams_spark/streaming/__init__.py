@@ -1,3 +1,3 @@
 """Structured Streaming operator variants (watermarked windows, stateful lag, stream joins)."""
 
-from . import curation, dedup, joins, state, stateful, throttle, windows  # noqa: F401
+from . import curation, dedup, joins, stateful, throttle, windows  # noqa: F401

@@ -461,7 +461,7 @@ def embedding_dedup_batch(
 ) -> DataFrame:
     """One microbatch of semantic near-dup suppression: assign
     arriving vectors to their IVF cell (Arrow argmin kernel —
-    identical cells to the in-plan JVM fold), join the index WITHIN
+    identical cells to the oracle's argmin), join the index WITHIN
     the cell only, hoisted-norm cosine ≥ tau drops the doc. Pure
     batch ops for ``foreachBatch``; the index side is never
     re-fitted or re-assigned. Boundary semantics match batch

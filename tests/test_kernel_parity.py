@@ -1,9 +1,10 @@
-"""Row-equality pins for the r10 Arrow similarity kernels against
-retained JVM join+fold compositions (invariant 22's contract — every
-hot kernel keeps a JVM twin pinned row-equal; r10 advice found
+"""Row-equality pins for the Arrow kernels. Where a kernel's query
+has a DuckDB oracle, the oracle is its twin (invariant 22); the r10
+similarity kernels are also pinned against JVM join+fold
+compositions built here in the test (r10 advice found
 routed_cosine_np / bucketed_topk_np compared only kernel-vs-kernel).
 
-The JVM twins here are the exact compositions the kernels replaced:
+Those test-side compositions are the exact plans the kernels replaced:
 broadcast/shuffled join on the route key + zip_with/aggregate dot
 fold + hoisted-norm division (+ the rank window for the top-k path).
 Equality is EXACT on the cosine doubles (invariant 2 — the kernels
@@ -17,7 +18,10 @@ dimensionality errors.
 """
 
 import math
+import os
+import sys
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -28,6 +32,9 @@ from rstreams_spark.functions.similarity import (
 from rstreams_spark.queries._util import t
 
 from conftest import SF_SMOKE
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+from oracle_check import canon  # noqa: E402
 
 K = 5
 
@@ -219,52 +226,61 @@ def test_minhash_signature_np_matches_jvm(spark):
     assert jvm == kern
 
 
-def test_qrep_stats_np_matches_jvm_fold(spark):
-    """quality_repetition's Arrow stats kernel must emit IDENTICAL
-    integer rows to the retained JVM run-length folds — same token
-    equality classes, same gram char masses (invariant 22's twin
-    pin)."""
-    from rstreams_spark.queries.textq import (
-        _qrep_staged, _qrep_stats_jvm, _qrep_stats_np,
-    )
+def _qrep_oracle_rows(sf_dir):
+    """quality_repetition's DuckDB twin over ``sf_dir``'s documents."""
+    from rstreams_spark.queries import ORACLES
 
-    staged = _qrep_staged(spark, SF_SMOKE).localCheckpoint(eager=False)
-    jvm = sorted(_qrep_stats_jvm(staged).collect())
-    kern = sorted(_qrep_stats_np(staged).collect())
-    assert len(jvm) > 0
-    assert jvm == kern
+    with duckdb.connect() as con:
+        con.sql(
+            f"create view documents as select * from '{sf_dir}/documents.parquet'"
+        )
+        return con.sql(ORACLES["quality_repetition"]).df()
 
 
-def test_qrep_stats_np_edge_docs(spark):
+def _assert_qrep_matches_oracle(spark, sf_dir):
+    from rstreams_spark.queries.textq import quality_repetition
+
+    got = quality_repetition(spark, sf_dir).toPandas()
+    want = _qrep_oracle_rows(sf_dir)
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) > 0
+    assert canon(got).equals(canon(want))
+
+
+def test_quality_repetition_matches_oracle(spark):
+    """quality_repetition, whose integer stats come from the Arrow
+    kernel ``_qrep_stats_np``, returns its DuckDB twin's rows exactly:
+    same token equality classes, same gram char masses, same
+    fractions and keep flags."""
+    _assert_qrep_matches_oracle(spark, SF_SMOKE)
+
+
+def test_qrep_stats_np_edge_docs(spark, tmp_path):
     """Single-token (no 2-grams), two-token (no 3-grams), repeated
-    single-token runs, and multi-space/empty-ish docs through both
-    stats shapes — the boundary cases of the run-length fold."""
-    from rstreams_spark.queries.textq import (
-        _qrep_stats_jvm, _qrep_stats_np,
-    )
-    from rstreams_spark.functions.text import norm_text, tokens
+    single-token runs, and multi-space/empty-ish docs — the boundary
+    cases of the gram counts — through the query against its oracle,
+    plus literal kernel stats per doc."""
+    from rstreams_spark.queries.textq import _qrep_staged, _qrep_stats_np
 
-    docs = spark.createDataFrame(
-        [
-            (1, "one"),
-            (2, "two tokens"),
-            (3, "a a a a a a"),
-            (4, "x y x y x y x y"),
-            (5, "unique words only here now"),
-            (6, "a  b   a  b"),
-        ],
-        "doc_id long, text string",
-    )
-    staged = docs.select(
-        "doc_id",
-        F.greatest(F.length(norm_text(F.col("text"))), F.lit(1))
-         .cast("long").alias("__nc"),
-        tokens(F.col("text")).alias("__toks"),
-    ).filter(F.size("__toks") >= 1).localCheckpoint(eager=False)
-    jvm = sorted(_qrep_stats_jvm(staged).collect())
-    kern = sorted(_qrep_stats_np(staged).collect())
-    assert jvm == kern
+    docs = [
+        (1, "one"),
+        (2, "two tokens"),
+        (3, "a a a a a a"),
+        (4, "x y x y x y x y"),
+        (5, "unique words only here now"),
+        (6, "a  b   a  b"),
+    ]
+    with duckdb.connect() as con:
+        con.execute("create table documents(doc_id bigint, text varchar)")
+        con.executemany("insert into documents values (?, ?)", docs)
+        con.sql(
+            f"copy documents to '{tmp_path}/documents.parquet' (format parquet)"
+        )
+    _assert_qrep_matches_oracle(spark, str(tmp_path))
+
+    kern = _qrep_stats_np(_qrep_staged(spark, str(tmp_path))).collect()
     by_id = {r["doc_id"]: r for r in kern}
+    assert set(by_id) == {1, 2, 3, 4, 5, 6}
     assert by_id[1]["top2_chars"] == 0 and by_id[1]["dup3_chars"] == 0
     assert by_id[2]["dup3_chars"] == 0
     assert by_id[3]["w_distinct"] == 1

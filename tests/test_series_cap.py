@@ -9,19 +9,25 @@ the cap below sf0.001's real series lengths (max 88 values/key).
 
 from __future__ import annotations
 
+import os
+import sys
+
 import duckdb
 import pytest
 
 from rstreams_spark.queries import ORACLES, core
 
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+from oracle_check import canon  # noqa: E402
+
 SF = "/root/testdata/sf0.001"
 TABLES = ("events",)
 
 
-def _oracle_con():
+def _oracle_con(sf: str = SF):
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"create view {t} as select * from '{SF}/{t}.parquet'")
+        con.sql(f"create view {t} as select * from '{sf}/{t}.parquet'")
     return con
 
 
@@ -47,12 +53,15 @@ def test_default_cap_keeps_parity_rows(spark):
     assert got.count() == len(want) > 0  # full hash parity rides `make oracle`
 
 
-def test_kernel_matches_jvm_twin(spark):
-    """r10: the Arrow sliding-window kernel must reproduce the all-JVM
-    fold composition row-for-row (same dists bit-for-bit, same order,
-    same ranks) — the kernel's dim-sequential accumulations claim
-    exact fold parity, so equality is on raw doubles, no tolerance."""
+def test_kernel_matches_oracle_rows(spark):
+    """The Arrow sliding-window kernel returns the oracle's rows
+    EXACTLY (same dists bit-for-bit, same ranks): its dim-sequential
+    accumulations follow the oracle's sequential list_reduce add
+    order, so equality is on raw doubles, no tolerance."""
     for sf in (SF, "/root/testdata/sf0.01"):
-        a = sorted(map(tuple, core.ts_similarity_topk(spark, sf).collect()))
-        b = sorted(map(tuple, core._ts_similarity_topk_jvm(spark, sf).collect()))
-        assert a == b and len(a) > 0
+        got = core.ts_similarity_topk(spark, sf).toPandas()
+        con = _oracle_con(sf)  # keep the connection alive past .sql()
+        want = con.sql(ORACLES["ts_similarity_topk"]).df()
+        assert sorted(got.columns) == sorted(want.columns)
+        assert len(got) > 0
+        assert canon(got).equals(canon(want)), sf

@@ -1,10 +1,15 @@
 """Salted aggregation + sign-LSH similarity units."""
 
+import duckdb
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from rstreams_spark.functions import similarity
 from rstreams_spark.operators.skew import SaltedAgg, salted_agg
+
+SF_PAIR = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+SF_IDS = ("sf0.001", "sf0.01")
 
 
 def test_salted_agg_matches_plain(spark):
@@ -194,29 +199,55 @@ def test_cosine_pairs_bucket_cap_guard_fires(spark):
     assert got.count() == 3 + 1  # bucket0={0,2,4}: C(3,2)=3; bucket1={1,3}: 1
 
 
-def test_semantic_clusters_buckets_on_learned_cells(spark):
-    """semantic_clusters pairs only vectors sharing an ivf_assign
-    Voronoi cell: every emitted cluster's members must sit in ≥1
-    common-cell pair chain, and the assignment must agree with a
-    direct argmin against ivf_fit centroids."""
-    from conftest import SF_SMOKE
-    from rstreams_spark.queries.dedupq import (
-        _n_coarse, ivf_assign2, ivf_coarse_groups, ivf_fit2,
-        semantic_cell_count, semantic_clusters,
-    )
+def _fit_corpus(spark, sf):
+    """The embeddings as ivf_topk / semantic_clusters fit them: NULL
+    and zero-norm vectors excluded at entry (the oracle's _SQL_NZ)."""
+    from rstreams_spark.functions.similarity import l2_norm, rankable_norm
     from rstreams_spark.queries._util import t
 
-    emb = t(spark, SF_SMOKE, "embeddings")
-    # the SAME cell count AND the same two-level fit/assign path the
-    # query uses — a fixed IVF_CELLS or the flat ivf_fit here would
-    # silently diverge from the query's actual cells
-    n_cells = semantic_cell_count(emb.count())
-    cents_g, coarse_one = ivf_coarse_groups(
-        ivf_fit2(emb, n_cells), _n_coarse(n_cells)
+    return (
+        t(spark, sf, "embeddings").select("vec_id", "embedding")
+        .where(F.col("embedding").isNotNull())
+        .where(rankable_norm(l2_norm(F.col("embedding"))))
     )
-    cells = ivf_assign2(
-        emb.select("vec_id", "embedding"), cents_g, coarse_one
+
+
+def _two_level_cells(spark, sf):
+    """semantic_clusters' index stage, verbatim: the corpus-sized
+    cell count, the two-level driver-row fit, the coarse tier and the
+    Arrow two-level assignment."""
+    from rstreams_spark.queries._util import t
+    from rstreams_spark.queries.dedupq import (
+        _assign2_np_rows, _coarse_rows_py, _ivf_fit_rows, _n_coarse,
+        semantic_cell_count,
     )
+
+    emb = _fit_corpus(spark, sf)
+    n_cells = semantic_cell_count(t(spark, sf, "embeddings").count())
+    crows, grows = _coarse_rows_py(
+        _ivf_fit_rows(emb, n_cells, True), _n_coarse(n_cells)
+    )
+    return n_cells, _assign2_np_rows(emb, crows, grows)
+
+
+def _oracle_cells(sf, cte):
+    with duckdb.connect() as con:
+        con.sql(
+            f"create view embeddings as select * from '{sf}/embeddings.parquet'"
+        )
+        return set(
+            con.sql(f"with {cte} select vec_id, cell from assigned").fetchall()
+        )
+
+
+def test_semantic_clusters_buckets_on_learned_cells(spark):
+    """semantic_clusters pairs only vectors sharing a learned Voronoi
+    cell: every 2-member cluster must be cell-homogeneous under the
+    cells its own index stage assigns."""
+    from conftest import SF_SMOKE
+    from rstreams_spark.queries.dedupq import semantic_clusters
+
+    n_cells, cells = _two_level_cells(spark, SF_SMOKE)
     cmap = {r["vec_id"]: r["cell"] for r in cells.select("vec_id", "cell").collect()}
     assert set(cmap.values()) <= set(range(n_cells))
     assert len(set(cmap.values())) > 1  # a real partition, not one mega-cell
@@ -235,48 +266,40 @@ def test_semantic_clusters_buckets_on_learned_cells(spark):
             assert cmap[a] == cmap[b]
 
 
-def test_np_assign_matches_jvm_assign(spark):
-    """ivf_assign2_np (the Arrow/numpy fit hot path) must produce
-    the EXACT cell per vector as the all-JVM in-plan argmin — the
-    two-level greedy pick, tie-breaks included. Dim-sequential
-    accumulation makes the d2 doubles bit-identical, so any mismatch
-    is a real kernel bug, not FP noise."""
-    from conftest import SF_SMOKE
-    from rstreams_spark.queries._util import t
+@pytest.mark.parametrize("sf", SF_PAIR, ids=SF_IDS)
+def test_two_level_cells_match_oracle(spark, sf):
+    """The Arrow two-level fit + assignment semantic_clusters runs
+    must put EVERY vector in the oracle's cell — seeds, Lloyd means,
+    coarse routing and greedy fine argmin, tie-breaks included.
+    Dim-sequential accumulation makes the d2 doubles bit-identical,
+    so any mismatch is a real kernel bug, not FP noise."""
     from rstreams_spark.queries.dedupq import (
-        _n_coarse, ivf_assign2, ivf_assign2_np, ivf_coarse_groups,
-        ivf_fit2, semantic_cell_count,
+        _SQL_CELLS_ADAPTIVE, _SQL_NC_ADAPTIVE, _sql_ivf_assign2,
     )
 
-    emb = t(spark, SF_SMOKE, "embeddings")
-    n_cells = semantic_cell_count(emb.count())
-    cents_g, coarse_one = ivf_coarse_groups(
-        ivf_fit2(emb, n_cells), _n_coarse(n_cells)
+    _, cells = _two_level_cells(spark, sf)
+    got = {(r["vec_id"], r["cell"]) for r in cells.collect()}
+    want = _oracle_cells(
+        sf, _sql_ivf_assign2(_SQL_CELLS_ADAPTIVE, _SQL_NC_ADAPTIVE)
     )
-    sel = emb.select("vec_id", "embedding")
-    jvm = {
+    assert got == want and len(got) == _fit_corpus(spark, sf).count()
+
+
+@pytest.mark.parametrize("sf", SF_PAIR, ids=SF_IDS)
+def test_flat_cells_match_oracle(spark, sf):
+    """ivf_assign_np over ivf_fit (ivf_topk's index and the streaming
+    semantic gate's) must put every vector in the oracle's cell."""
+    from rstreams_spark.queries.dedupq import (
+        IVF_CELLS, _sql_ivf_assign, ivf_assign_np, ivf_fit,
+    )
+
+    emb = _fit_corpus(spark, sf)
+    got = {
         (r["vec_id"], r["cell"])
-        for r in ivf_assign2(sel, cents_g, coarse_one).collect()
+        for r in ivf_assign_np(emb, ivf_fit(emb)).collect()
     }
-    np_ = {
-        (r["vec_id"], r["cell"])
-        for r in ivf_assign2_np(sel, cents_g, coarse_one).collect()
-    }
-    assert jvm == np_ and len(jvm) == emb.count()
-
-
-def test_np_assign_single_level_matches_jvm(spark):
-    """ivf_assign_np (flat argmin, ivf_topk's path) must agree
-    row-for-row with the in-plan ivf_assign fold."""
-    from conftest import SF_SMOKE
-    from rstreams_spark.queries._util import t
-    from rstreams_spark.queries.dedupq import ivf_assign, ivf_assign_np, ivf_fit
-
-    emb = t(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
-    cents = ivf_fit(t(spark, SF_SMOKE, "embeddings"))
-    jvm = {(r["vec_id"], r["cell"]) for r in ivf_assign(emb, cents).collect()}
-    np_ = {(r["vec_id"], r["cell"]) for r in ivf_assign_np(emb, cents).collect()}
-    assert jvm == np_ and len(jvm) == emb.count()
+    want = _oracle_cells(sf, _sql_ivf_assign(str(IVF_CELLS)))
+    assert got == want and len(got) == emb.count()
 
 
 def test_np_pairs_match_jvm_pairs_and_cap_fires(spark):
@@ -373,37 +396,37 @@ def test_np_pairs_edge_parity_nan_null(spark):
 
 
 def test_np_assign_null_embedding_matches_jvm(spark):
-    """NULL embeddings make every d2 fold NULL in the JVM argmin, so
-    the struct-min degenerates to the smallest cell (flat) / smallest
-    g's smallest cell (two-level). The numpy kernels must reproduce
-    that exactly rather than crash on the ragged batch."""
+    """NULL embeddings make every d2 fold NULL, so a SQL argmin's
+    (d2, id) order degenerates to the smallest cell (flat) / the
+    smallest g's smallest cell (two-level). The numpy kernels must
+    land there rather than crash on the ragged batch. The oracle
+    filters NULL vectors out, so it cannot pin this: the expected
+    cells are the output of the retired all-JVM argmin folds
+    (ivf_assign / ivf_coarse_groups + ivf_assign2) on these rows."""
     from rstreams_spark.queries.dedupq import (
-        _n_coarse, ivf_assign, ivf_assign2, ivf_assign2_np,
-        ivf_assign_np, ivf_coarse_groups,
+        _assign2_np_rows, _coarse_rows_py, _n_coarse, ivf_assign_np,
     )
 
+    cent_rows = [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [5.0, 5.0])]
     cents = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [5.0, 5.0])],
-        "cell int, centroid array<double>",
+        cent_rows, "cell int, centroid array<double>"
     )
     vecs = spark.createDataFrame(
         [(1, [0.1, 0.1]), (2, None), (3, [4.0, 4.0])],
         "vec_id bigint, embedding array<double>",
     )
-    jvm = {(r["vec_id"], r["cell"]) for r in ivf_assign(vecs, cents).collect()}
+    want = {(1, 0), (2, 0), (3, 2)}
     np_ = {(r["vec_id"], r["cell"]) for r in ivf_assign_np(vecs, cents).collect()}
-    assert jvm == np_ and len(np_) == 3
+    assert np_ == want
 
-    cents_g, coarse_one = ivf_coarse_groups(cents, _n_coarse(3))
-    jvm2 = {
-        (r["vec_id"], r["cell"])
-        for r in ivf_assign2(vecs, cents_g, coarse_one).collect()
-    }
+    crows, grows = _coarse_rows_py(cent_rows, _n_coarse(3))
+    assert [(c, g) for c, _, g in crows] == [(0, 0), (1, 1), (2, 1)]
+    assert grows == [(0, [0.0, 0.0]), (1, [1.0, 1.0])]
     np2 = {
         (r["vec_id"], r["cell"])
-        for r in ivf_assign2_np(vecs, cents_g, coarse_one).collect()
+        for r in _assign2_np_rows(vecs, crows, grows).collect()
     }
-    assert jvm2 == np2 and len(np2) == 3
+    assert np2 == want
 
 
 def test_decontaminate_fuzzy_contract(spark):
@@ -429,48 +452,6 @@ def test_decontaminate_fuzzy_contract(spark):
         assert r["jaccard"] >= DECON_FUZZY_TAU
 
 
-def test_np_lloyd_mean_matches_jvm(spark):
-    """_lloyd_mean_np (the Arrow fit mean, r7) must reproduce the
-    JVM collect_list+fold mean BIT-exactly: member-sequential adds
-    in vec_id order with a 0.0 head, cap after the sort, one divide
-    by the capped count. Any double mismatch is a kernel bug, not FP
-    noise — so compare raw float bits, not approx."""
-    import struct
-
-    from conftest import SF_SMOKE
-    from pyspark.sql import functions as F
-
-    from rstreams_spark.queries._util import t
-    from rstreams_spark.queries.dedupq import (
-        IVF_MEAN_CAP, _lloyd_mean, _lloyd_mean_np, ivf_assign_np, ivf_fit,
-    )
-
-    emb = t(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
-    cents = ivf_fit(emb)
-    assigned = ivf_assign_np(emb, cents).localCheckpoint(eager=False)
-    members = (
-        assigned.groupBy("cell")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("vec_id"), F.col("embedding")))
-                ),
-                1, IVF_MEAN_CAP,
-            ).alias("__sl")
-        )
-    )
-
-    def bits(rows):
-        return {
-            r["cell"]: tuple(struct.pack("<d", v) for v in r["centroid"])
-            for r in rows
-        }
-
-    jvm = bits(_lloyd_mean(members).collect())
-    np_ = bits(_lloyd_mean_np(assigned).collect())
-    assert jvm == np_ and len(jvm) > 1
-
-
 def test_np_kernels_ragged_dims_raise_targeted(spark):
     """Mixed-dimension embeddings in one kernel batch raise the
     targeted stack_f64 error naming offending ids — never numpy's
@@ -489,25 +470,6 @@ def test_np_kernels_ragged_dims_raise_targeted(spark):
     )
     with pytest.raises(Exception, match="mixed embedding dimensions"):
         cosine_pairs_np(vecs, 0.0).collect()
-
-
-def test_np_lloyd_mean_null_embedding_raises(spark):
-    """NULL embeddings reaching the Lloyd mean fail loudly (the JVM
-    twin would silently emit a NULL centroid — poison either way)."""
-    import pytest
-    from pyspark.sql import Row
-
-    from rstreams_spark.queries.dedupq import _lloyd_mean_np
-
-    assigned = spark.createDataFrame(
-        [
-            Row(vec_id=1, embedding=[1.0, 2.0], cell=0),
-            Row(vec_id=2, embedding=None, cell=0),
-        ],
-        "vec_id bigint, embedding array<double>, cell int",
-    )
-    with pytest.raises(Exception, match="NULL embedding"):
-        _lloyd_mean_np(assigned).collect()
 
 
 def test_lsh_topk_library_matches_catalog(spark):
@@ -533,38 +495,36 @@ def test_lsh_topk_library_matches_catalog(spark):
         assert lib == cat and len(lib) > 0
 
 
-def test_coarse_rows_py_matches_ivf_coarse_groups(spark):
-    """The driver-side coarse twin (`_coarse_rows_py`, the r8
-    driver-orchestrated fit's routing step) must reproduce the
-    DataFrame `ivf_coarse_groups` EXACTLY: same coarse seeds (hash
-    order), same per-cell g (dim-sequential d2 fold, (d2, g)
-    struct-min tie-break) — on centroids engineered to include an
-    exact distance TIE between two coarse centroids."""
-    from rstreams_spark.queries.dedupq import (
-        _coarse_rows_py, _n_coarse, ivf_coarse_groups,
-    )
+def test_coarse_rows_py_matches_ivf_coarse_groups():
+    """The driver-side coarse tier (`_coarse_rows_py`, the fit's and
+    semantic_clusters' routing step) must pick the coarse seeds in
+    hash order and route every cell by the dim-sequential d2 with the
+    (d2, g) first-min tie-break, on centroids engineered to include
+    an exact distance TIE between two coarse centroids. The expected
+    maps are the output of the retired all-JVM `ivf_coarse_groups`
+    on these rows (the oracle's gseed/c2g CTEs run the same
+    row_number-over-(d2, g) argmin)."""
+    from rstreams_spark.queries.dedupq import _coarse_rows_py, _n_coarse
 
-    # cell 4 sits exactly midway between cells 0 and 1 wherever both
-    # become coarse seeds -> tie must break to the smaller g
+    # seeds (hash order) are cells 0, 6, 1 -> g 0, 1, 2; cell 4 at
+    # (1, 3) is exactly d2 = 10 from both g0 (0, 0) and g2 (2, 0) and
+    # farther from g1 -> the tie must break to the smaller g
     rows = [
         (0, [0.0, 0.0]), (1, [2.0, 0.0]), (2, [10.0, 10.0]),
-        (3, [10.5, 10.0]), (4, [1.0, 0.0]), (5, [-3.0, 7.0]),
+        (3, [10.5, 10.0]), (4, [1.0, 3.0]), (5, [-3.0, 7.0]),
         (6, [0.25, -0.5]),
     ]
     nc = _n_coarse(len(rows))
-    cents = spark.createDataFrame(rows, "cell int, centroid array<double>")
-    cents_g, coarse_one = ivf_coarse_groups(cents, nc)
-    df_crows = {
-        r["cell"]: (tuple(r["centroid"]), r["g"])
-        for r in cents_g.collect()
+    assert nc == 3
+    crows, grows = _coarse_rows_py(rows, nc)
+    assert {c: (tuple(v), g) for c, v, g in crows} == {
+        0: ((0.0, 0.0), 0), 1: ((2.0, 0.0), 2), 2: ((10.0, 10.0), 2),
+        3: ((10.5, 10.0), 2), 4: ((1.0, 3.0), 0), 5: ((-3.0, 7.0), 0),
+        6: ((0.25, -0.5), 1),
     }
-    df_grows = {
-        g["g"]: tuple(g["centroid"])
-        for g in coarse_one.collect()[0]["__coarse"]
+    assert {g: tuple(v) for g, v in grows} == {
+        0: (0.0, 0.0), 1: (0.25, -0.5), 2: (2.0, 0.0),
     }
-    crows, grows = _coarse_rows_py([(c, v) for c, v in rows], nc)
-    assert {c: (tuple(v), g) for c, v, g in crows} == df_crows
-    assert {g: tuple(v) for g, v in grows} == df_grows
 
 
 def test_zero_norm_vectors_dropped_everywhere(spark):
