@@ -3,7 +3,7 @@
 
 SF ?= /root/testdata/sf0.01
 
-.PHONY: test oracle bench bench-check smoke examples plans scaling sf1 sf10 sf30 verify probes bucketed-bench profile
+.PHONY: test oracle bench bench-check smoke examples plans scaling sf1 sf10 sf30 verify probes profile
 
 # the full drive recipe (.claude/skills/verify/SKILL.md) in one
 # command: driver contract -> full oracle gate replica -> pytest
@@ -12,23 +12,15 @@ verify: smoke oracle test
 plans:
 	python tools/plan_audit.py
 
-sf1:
-	python tools/gen_sf1.py
+# local decade-up datasets under .localdata/ (each reads the level
+# below: sf0.1 -> sf1 -> sf10 -> sf30); sf1_skew is
+# `python tools/gen_local.py sf1_skew`
+sf1 sf10 sf30:
+	python tools/gen_local.py $@
 
-sf10:
-	python tools/gen_sf10.py
-
-# third-decade documents-only tiling (ngram_novelty/dedup_clusters
-# spot evidence — see tools/gen_sf30.py)
-sf30:
-	python tools/gen_sf30.py
-
+# SCALING.md from query_profile.profile() rows (2 timed rounds per SF)
 scaling:
 	python tools/scale_probe.py
-
-# bucketed-lake A/B at sf1 (catalog queries on co-bucketed facts)
-bucketed-bench:
-	python tools/bucketed_bench.py
 
 # where each named query's seconds go (build, jobs, executor,
 # shuffle, Python workers), one JSON line per query from Spark's

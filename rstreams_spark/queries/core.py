@@ -480,7 +480,7 @@ def interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (invariant 18 — a NULL instant has no position on the time
     axis); NULL join keys never match (SQL equi-join semantics on both
     engines); a hot key multiplies genuine output (purchases x errors
-    within the band) — see tools/skew_bench.py
+    within the band) — see PERF.md "Round 9: skew at scale"
     """
     ev = t(spark, sf_dir, "events")
     cols = ["user_id", "event_id", "ts"]

@@ -176,10 +176,13 @@ def test_stateless_collapse_detector():
 
 
 def test_query_profile_one_row_per_query_and_no_log_left(tmp_path):
-    """``tools/query_profile.py`` in a fresh process: one JSON row for
-    the named query, folded from a real event log, and the log's
-    temporary directory is gone when the process exits."""
+    """``tools/query_profile.py`` in a fresh process: one JSON row per
+    named query, folded from a real event log, and the log's temporary
+    directory is gone when the process exits. A query whose table is
+    missing gets an error row and a non-zero exit, and does not stop
+    the other query's row."""
     import os
+    import shutil
     import subprocess
     import sys
 
@@ -188,22 +191,49 @@ def test_query_profile_one_row_per_query_and_no_log_left(tmp_path):
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     tmp = tmp_path / "tmp"
     tmp.mkdir()
+    sf = tmp_path / "sf"  # lineitem only: tpch_q12 also reads orders
+    sf.mkdir()
+    shutil.copy(os.path.join(SF_SMOKE, "lineitem.parquet"), sf)
     env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_CPUS="2",
                SPARK_GRAFT_DRIVER_MEM="1g")
     p = subprocess.run(
         [sys.executable, os.path.join(root, "tools", "query_profile.py"),
-         SF_SMOKE, "tpch_q6"],
+         str(sf), "tpch_q12", "tpch_q6"],
         capture_output=True, text=True, env=env, cwd=tmp_path, timeout=300,
     )
-    assert p.returncode == 0, p.stderr[-3000:]
-    rows = [json.loads(line) for line in p.stdout.splitlines()
-            if line.startswith("{")]
-    assert [r["query"] for r in rows] == ["tpch_q6"]
-    (row,) = rows
+    assert p.returncode == 1, p.stderr[-3000:]
+    rows = {r["query"]: r for r in (json.loads(line) for line in p.stdout.splitlines()
+                                    if line.startswith("{"))}
+    assert sorted(rows) == ["tpch_q12", "tpch_q6"]
+    assert set(rows["tpch_q12"]) == {"query", "error"}
+    assert "orders" in rows["tpch_q12"]["error"]
+    row = rows["tpch_q6"]
     assert row["jobs"] >= 1
     assert row["exec_s"] > 0
     assert row["failed_tasks"] == 0
     assert os.listdir(tmp) == []  # the event-log directory is gone
+
+
+def test_query_profile_exit_code_follows_error_rows(monkeypatch, capsys):
+    """``tools/query_profile.py``'s ``main`` prints every row without
+    its ``sf`` and exits 0 when every query ran, 1 when any row is an
+    error. ``profile`` is stubbed: no Spark session."""
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    monkeypatch.syspath_prepend(os.path.join(root, "tools"))
+    import query_profile
+
+    ok = {"query": "q_ok", "sf": "sf", "build_s": 0.1234, "exec_s": 1.0, "jobs": 2}
+    bad = {"query": "q_bad", "sf": "sf", "error": "AnalysisException: no table"}
+    ok_out = {"query": "q_ok", "build_s": 0.123, "exec_s": 1.0, "jobs": 2}
+    bad_out = {"query": "q_bad", "error": "AnalysisException: no table"}
+    for rows, code, out in (([ok], 0, [ok_out]), ([ok, bad], 1, [ok_out, bad_out]),
+                            ([bad], 1, [bad_out])):
+        monkeypatch.setattr(query_profile, "profile",
+                            lambda sfs, names, rounds, rows=rows: [dict(r) for r in rows])
+        assert query_profile.main("sf", ["q"]) == code
+        assert [json.loads(ln) for ln in capsys.readouterr().out.splitlines()] == out
 
 
 def _run_bench_parent(tmp_path, inner_src: str) -> tuple[str, str]:

@@ -4,8 +4,9 @@ that AQE's OptimizeSkewedJoin actually splits a skewed shuffle join
 under this engine's session settings (adaptive.skewJoin.enabled rides
 get_spark defaults), and that the salted fallback exists for the
 aggregation side. The wall-clock ≤2× skewed-vs-uniform evidence lives
-in tools/skew_bench.py output (PERF.md r9) — timing is a tool's job,
-activation is a test's.
+in PERF.md "Round 9: skew at scale" (re-time it with the profile on
+the derived sf1_skew) — timing is a tool's job, activation is a
+test's.
 """
 
 from pyspark.sql import functions as F

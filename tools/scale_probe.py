@@ -1,17 +1,24 @@
 """Generate SCALING.md: per-query wall time across scale factors.
 
 The 100 TB question is not "how fast at sf0.1" but "how does time
-grow with data". This probe times every bench headliner (noop sink,
-min-of-2 after a warm pass) at sf0.001 / sf0.01 / sf0.1 — plus sf1
-when the locally-generated decade-up dataset exists (build it with
-``python tools/gen_sf1.py``; /root/testdata is read-only and tops
-out at sf0.1) — and reports the per-decade growth ratios. Linear
-work should show ratios well under 10 locally (fixed per-query
-overhead dominates small SFs); anything approaching or exceeding
-~10 on the last measured step is flagged for review.
+grow with data". This probe profiles every benched query
+(``query_profile.profile``: a warm pass, then 2 timed rounds, noop
+sink) at sf0.001 / sf0.01 / sf0.1, plus the locally derived sf1 and
+sf10 when they exist (``python tools/gen_local.py sf1``, then
+``sf10``; the read-only test data tops out at sf0.1). A cell
+is the min over the 2 rounds of ``build_s + exec_s``. Each session's
+cells append to scaling_history.jsonl, tagged ``"timer": "profile"``,
+and SCALING.md shows the per-cell min over the last 2 sessions with
+the same SF layout and timer, with the per-decade growth ratios.
+Untagged rows come from the hand-timed loop this replaced (event log
+off, warm runs at sf0.001 and sf10 only); the two are never merged.
+Linear work should show ratios well under 10 locally (fixed
+per-query overhead dominates small SFs); anything approaching or
+exceeding ~10 on the last measured step is flagged for review. A
+query that raises at an SF leaves a hole (—).
 
-Usage: python tools/scale_probe.py   (writes SCALING.md; ~6 min
-without sf1, ~15 with)
+Usage: python tools/scale_probe.py [--rebuild]
+(--rebuild re-renders SCALING.md from the history without measuring)
 """
 
 from __future__ import annotations
@@ -19,26 +26,22 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, ".")
+from query_profile import ROOT, profile
 
-HISTORY = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "scaling_history.jsonl",
-)
+HISTORY = os.path.join(ROOT, "scaling_history.jsonl")
+SCALING = os.path.join(ROOT, "SCALING.md")
 MERGE_SESSIONS = 2  # SCALING.md cells = min over the last N sessions
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-SF1 = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".localdata", "sf1",
-)
-SF10 = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".localdata", "sf10",
-)
+LOCAL = [os.path.join(ROOT, ".localdata", n) for n in ("sf1", "sf10")]
 FLAG_RATIO = 12.0  # growth on the final 10× step that warrants review
+TIMER = "profile"  # history tag: cells timed by query_profile.profile
+# SCALING.md header line per history timer tag (None = untagged rows)
+TIMERS = {
+    None: "hand-timed loop, event log off, warm runs at sf0.001 and sf10 only",
+    TIMER: "query_profile.profile, event log on, warm pass at every SF",
+}
 
 # durable analysis that must survive regeneration (appended verbatim):
 # per-row draws are single-session min-of-2 — read outliers against
@@ -82,7 +85,7 @@ STANDING_NOTES = [
     "  surface = LSH/IVF paths), and the token-bound linear scans",
     "  are data-linear by design.",
     "- THIRD-decade spot rows (sf30 tiling — documents ×3 +",
-    "  embeddings ×3, tools/gen_sf30.py; min-of-2 after warm, r10):",
+    "  embeddings ×3, tools/gen_local.py sf30; min-of-2 after warm, r10):",
     "  ngram_novelty 15.4 s (sf10→sf30 2.7× on 3× data — linear",
     "  token work); dedup_clusters 46.6 s (2.8× on 3×; edges",
     "  2.88M → 9.48M = ×3.3 with the CC stage ×2.1 — sublinear in",
@@ -108,152 +111,67 @@ STANDING_NOTES = [
     "  rows above measure.",
 ]
 
-# the SECOND decade (sf10, tools/gen_sf10.py) is probed FULL-WIDTH
-# since r11 (verdict item 3: every SCALING.md row carries an sf10
-# cell, so a super-linear step anywhere in the benched set is
-# attributed, not assumed). Through r10 only the scale-path
-# headliners were probed; the r11 run found the remainder's steps
-# unremarkable, at the cost of a longer probe session.
-SF10_SET = None  # None = all benched queries
-
-
 def main() -> None:
     from bench import HEADLINERS, LONG_TAIL
-    HEADLINERS = HEADLINERS + LONG_TAIL  # tools sweep the full benched set
-    from rstreams_spark.queries import REGISTRY
-    from rstreams_spark.session import gc_hygiene, get_spark
+    order = HEADLINERS + LONG_TAIL
 
     sfs = list(SFS)
-    have_sf1 = os.path.isdir(SF1)
-    if have_sf1:
-        sfs.append(SF1)
-    else:
-        print("# sf1 absent — run tools/gen_sf1.py to probe one decade up",
-              file=sys.stderr)
-    have_sf10 = have_sf1 and os.path.isdir(SF10)
-    if have_sf10:
-        sfs.append(SF10)
-    elif have_sf1:
-        print("# sf10 absent — run tools/gen_sf10.py for the second decade",
-              file=sys.stderr)
+    for d in LOCAL:  # sf10 only on top of sf1
+        if not os.path.isdir(d):
+            print(f"# {d} absent: python tools/gen_local.py "
+                  f"{os.path.basename(d)} adds that decade", file=sys.stderr)
+            break
+        sfs.append(d)
 
-    spark = get_spark("scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(64).repartition(8).mapInPandas(lambda it: it, "id long").count()
-
-    def run(name, sf):
-        df = REGISTRY[name](spark, sf)
-        df.write.format("noop").mode("overwrite").save()
-
-    for name in HEADLINERS:  # codegen warm pass
-        run(name, SFS[0])
-
-    measured_by_name: dict[str, list] = {}
-    for name in HEADLINERS:
-        times = []
-        for sf in sfs:
-            if sf == SF10 and SF10_SET is not None and name not in SF10_SET:
-                times.append(None)
-                continue
-            try:
-                # dead checkpoint blocks from earlier rows otherwise
-                # pile up across the 62-query session and read as
-                # fake superlinear cells (session.gc_hygiene)
-                gc_hygiene(spark)
-                if sf == SF10:
-                    # the second decade gets an UNTIMED warm execution
-                    # first: a query's first sf10 run in a session can
-                    # pay one-time costs (page-cache fill of the 2.3 GB
-                    # tiling, JIT of the cold SMJ/sort paths) that land
-                    # on BOTH min-of-2 draws — the r9 probe recorded
-                    # tpch_q3 at 17.5 s this way where warm draws are
-                    # 2.7-4.9 s (VERDICT r9 item 1)
-                    run(name, sf)
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    run(name, sf)
-                    best = min(best, time.perf_counter() - t0)
-                times.append(best)
-            except Exception as ex:
-                # a raising query (e.g. a documented cap/regime
-                # transition at a new SF) must not kill the session —
-                # record the hole and keep probing
-                print(f"# {name} @ {os.path.basename(sf)}: RAISED "
-                      f"{type(ex).__name__}: {str(ex)[:160]}",
-                      file=sys.stderr)
-                times.append(None)
-        measured_by_name[name] = times
-        print(f"# {name}: {[None if t is None else round(t, 3) for t in times]}",
-              file=sys.stderr)
-
-    # ---- cross-session noise discipline (cf. tools/bench_check.py):
-    # one session's min-of-2 can still land inside a multi-minute
-    # host noise band (r10: minhash_lsh_topk drew 15.4/15.4 s at sf1
-    # in one clean run where adjacent sessions draw 5.3-6.0 s), so
-    # the SHIPPED table takes the per-cell MIN over the last
-    # MERGE_SESSIONS probe sessions with the same SF layout — run
-    # the probe twice at the same HEAD per round. Raw per-session
-    # draws append to scaling_history.jsonl (provenance).
-    sf_names = [os.path.basename(p) for p in sfs]
-    entry = {"sfs": sf_names, "queries": {
-        k: [None if t is None else round(t, 3) for t in v]
-        for k, v in measured_by_name.items()
+    best: dict[tuple[str, str], float] = {}
+    for r in profile(sfs, order, 2):
+        key = (r["query"], r["sf"])
+        if "error" in r:
+            print(f"# {r['query']} @ {os.path.basename(r['sf'])}: RAISED "
+                  f"{r['error']}", file=sys.stderr)
+            continue
+        t = r["build_s"] + r["exec_s"]
+        best[key] = min(best.get(key, t), t)
+    entry = {"sfs": [os.path.basename(p) for p in sfs], "timer": TIMER, "queries": {
+        q: [round(best[q, sf], 3) if (q, sf) in best else None for sf in sfs]
+        for q in order
     }}
     with open(HISTORY, "a") as fh:
         fh.write(json.dumps(entry) + "\n")
-    render(list(HEADLINERS))
+    render(order)
 
 
-def _load_history() -> list[dict]:
-    if not os.path.exists(HISTORY):
-        return []
-    with open(HISTORY) as fh:
-        return [json.loads(ln) for ln in fh if ln.strip()]
-
-
-def render(order: list[str]) -> None:
+def render(order: list[str], history_path: str = HISTORY,
+           out_path: str = SCALING) -> None:
     """Compose SCALING.md from the last MERGE_SESSIONS history
-    entries with the newest entry's SF layout (per-cell min)."""
-    history = _load_history()
+    entries with the newest entry's SF layout and timer (per-cell min)."""
+    history = []
+    if os.path.exists(history_path):
+        with open(history_path) as fh:
+            history = [json.loads(ln) for ln in fh if ln.strip()]
     if not history:
-        raise SystemExit("scale_probe: no scaling_history.jsonl to render")
-    sf_names = history[-1]["sfs"]
-    mergeable = [h for h in history if h.get("sfs") == sf_names]
-    sessions = mergeable[-MERGE_SESSIONS:]
+        raise SystemExit(f"scale_probe: no history in {history_path} to render")
+    sf_names, timer = history[-1]["sfs"], history[-1].get("timer")
+    sessions = [h for h in history
+                if h["sfs"] == sf_names and h.get("timer") == timer][-MERGE_SESSIONS:]
     merged: dict[str, list] = {}
     for h in sessions:
         for name, times in h["queries"].items():
-            if name not in merged:
-                merged[name] = list(times)
-                continue
-            cur = merged[name]
-            if len(cur) != len(times):
-                merged[name] = list(times)
-                continue
-            merged[name] = [
-                min(a, b) if (a is not None and b is not None) else
-                (a if b is None else b)
-                for a, b in zip(cur, times)
-            ]
+            cur = merged.setdefault(name, times)
+            merged[name] = [b if a is None else a if b is None else min(a, b)
+                            for a, b in zip(cur, times)]
 
     rows = []
     for name in order:
         if name not in merged:
             continue
         times = merged[name]
-        measured = [t for t in times if t is not None]
-        ratios = [
-            measured[i + 1] / measured[i] if measured[i] else float("nan")
-            for i in range(len(measured) - 1)
-        ]
-        flag = " ⚠" if ratios and ratios[-1] >= FLAG_RATIO else ""
-        cells = " | ".join(
-            "—" if t is None else f"{t:.3f}" for t in times
-        )
-        rcells = " | ".join(f"{r:.1f}×" for r in ratios)
-        if len(measured) < len(times):
-            rcells += " | —"
+        ratios = [b / a if a and b is not None else None
+                  for a, b in zip(times, times[1:])]
+        last = next((r for r in reversed(ratios) if r is not None), 0)
+        flag = " ⚠" if last >= FLAG_RATIO else ""
+        cells = " | ".join("—" if t is None else f"{t:.3f}" for t in times)
+        rcells = " | ".join("—" if r is None else f"{r:.1f}×" for r in ratios)
         rows.append(f"| {name} | {cells} | {rcells}{flag} |")
 
     sf_heads = " | ".join(f"{n} s" for n in sf_names)
@@ -263,18 +181,20 @@ def render(order: list[str]) -> None:
     )
     lines = [
         "# SCALING — per-query wall time vs scale factor",
-        "(auto-generated by tools/scale_probe.py; noop sink, min-of-2",
-        f"per session, per-cell min over the last {len(sessions)} probe",
-        "session(s) — cross-session noise discipline, raw draws in",
-        "scaling_history.jsonl; warm session; local[32])",
+        "(auto-generated by tools/scale_probe.py; noop sink, build +",
+        "exec seconds, min-of-2 per session, per-cell min over the last",
+        f"{len(sessions)} probe session(s) — cross-session noise discipline,",
+        "raw draws in scaling_history.jsonl; warm session; local[32])",
+        f"Timer: {TIMERS[timer]}.",
+        "Sessions timed another way are never merged into these cells.",
         "",
-        "Each SF step is 10× the data (sf1 is the locally-tiled",
-        "decade-up set from tools/gen_sf1.py — key-shifted copies,",
+        "Each SF step is 10× the data (sf1 and sf10 are the locally",
+        "tiled decade-up sets from tools/gen_local.py — key-shifted copies,",
         "preserved join selectivities and dup rates). Ratios well",
         "under 10× mean fixed overhead still dominates (good",
         "headroom); ratios near or above ~10× mean the query is",
-        f"data-bound locally — flagged (⚠) above {FLAG_RATIO}× on the",
-        "final step.",
+        f"data-bound locally — flagged (⚠) at {FLAG_RATIO}× or above on",
+        "the last measured step.",
         "",
         f"| query | {sf_heads} | {ratio_heads} |",
         "|---" * (1 + len(sf_names) + len(sf_names) - 1) + "|",
@@ -282,17 +202,15 @@ def render(order: list[str]) -> None:
         "",
         *STANDING_NOTES,
     ]
-    with open("SCALING.md", "w") as f:
+    with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote SCALING.md ({len(rows)} queries, "
+    print(f"wrote {out_path} ({len(rows)} queries, "
           f"min over {len(sessions)} session(s))")
 
 
 if __name__ == "__main__":
     if "--rebuild" in sys.argv:
-        # re-render from history without re-measuring (e.g. after a
-        # second probe session, or a STANDING_NOTES edit)
         from bench import HEADLINERS, LONG_TAIL
-        render(list(HEADLINERS) + list(LONG_TAIL))
+        render(HEADLINERS + LONG_TAIL)
     else:
         main()
