@@ -16,6 +16,9 @@ SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 CODEGEN_CACHE_ENTRIES = 2048
 # Tungsten memory page (see get_spark)
 PAGE_SIZE = "4m"
+# the directory holding the package and the Python-worker daemon
+# module (rstreams_daemon.py), on every Python worker's path
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_mem() -> str:
@@ -60,6 +63,11 @@ def get_spark(
     order, every repeated pass of the 17 TPC-H headliners (~205
     classes) recompiled ~200 of them. A retained class costs ~44 KB of
     heap and metaspace; ``codegen_stats`` reads the compile count.
+
+    Python workers start from ``rstreams_daemon`` (PySpark's daemon,
+    importing pyspark from the installed package rather than
+    SPARK_HOME's zips), with ``PACKAGE_ROOT`` on their ``PYTHONPATH``,
+    so they import the package whatever the driver's working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -133,6 +141,13 @@ def get_spark(
         # fallback (r8 ADVICE). The raise is now scoped to the
         # small-buffer minhash pipelines via ``oha_session`` below.
         .config("spark.ui.enabled", "false")
+        # PySpark's daemon, minus SPARK_HOME's zips on the workers'
+        # path: with them, every Python task re-read 16 zip directories
+        # (~0.1 s each, a third of a lag2 trigger; rstreams_daemon.py).
+        # PACKAGE_ROOT reaches that module and the package from any
+        # working directory (the daemon's cwd is the driver's)
+        .config("spark.python.daemon.module", "rstreams_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     conf = dict(extra_conf or {})
     if shuffle_partitions is not None:

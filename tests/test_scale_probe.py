@@ -1,8 +1,9 @@
 """SCALING.md is a rendering of scaling_history.jsonl
 (tools/scale_probe.py::render), so the committed table must be exactly
 what the committed history renders to, and the merge rules (per-cell
-min over the last 2 same-layout sessions, holes, the growth flag) are
-pinned on a synthetic history. No Spark session."""
+min over the last 2 sessions with the same SF layout, timer and core
+count, holes, the growth flag) are pinned on a synthetic history. No
+Spark session."""
 
 from __future__ import annotations
 
@@ -35,7 +36,9 @@ def test_render_merges_last_two_same_layout_sessions(tmp_path):
                      "q_flat": [1.0, 1.0, 1.0], "q_tail": [0.1, 1.3, None]}},
         {"sfs": two, "timer": timer, "queries": {"q_min": [9.0, 9.0]}},
         {"sfs": three, "queries": {"q_min": [0.001] * 3}},  # other timer
-        {"sfs": three, "timer": timer,
+        {"sfs": three, "timer": timer, "cpus": 4,           # other core count
+         "queries": {"q_min": [0.001] * 3}},
+        {"sfs": three, "timer": timer, "cpus": 32,          # = the untagged rows
          "queries": {"q_min": [0.4, 6.0, 60.0], "q_hole": [None, 2.0, 5.0],
                      "q_flag": [0.1, 0.25, 3.0]}},
     ]
@@ -57,3 +60,12 @@ def test_render_merges_last_two_same_layout_sessions(tmp_path):
     assert ("| query | sf0.001 s | sf0.01 s | sf0.1 s | ×(0.001→0.01) | ×(0.01→0.1) |"
             in text)
     assert f"Timer: {scale_probe.TIMERS[timer]}." in text
+    assert "local[32])" in text
+
+    # the newest session's core count picks the sessions and the header
+    hist.write_text("".join(json.dumps(h) + "\n" for h in history[:-1]))
+    scale_probe.render(["q_min"], str(hist), str(out))
+    text = out.read_text()
+    assert [ln for ln in text.splitlines() if ln.startswith("| q_")] == [
+        "| q_min | 0.001 | 0.001 | 0.001 | 1.0× | 1.0× |"]
+    assert "local[4])" in text

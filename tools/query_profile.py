@@ -9,7 +9,8 @@ build (Python/py4j construction, eager jobs included) and its
 After the session stops, the log is folded by ``perfbench/eventlog.py``
 into one row per query, SF and round: ``build_s``, ``exec_s``,
 ``build_jobs``, ``driver_gap_s`` (seconds of the query's span no job
-covers) and every counter in ``eventlog.COUNTERS``. A query that
+covers), ``cpus`` (the session's ``defaultParallelism``) and every
+counter in ``eventlog.COUNTERS``. A query that
 raises at an SF gets one ``{"query", "sf", "error"}`` row there and
 the others go on.
 
@@ -56,6 +57,7 @@ def profile(sf_dirs: list[str], names: list[str], rounds: int) -> list[dict]:
         })
         sc = spark.sparkContext
         sc.setLogLevel("ERROR")
+        cpus = sc.defaultParallelism
         try:
             for sf in sf_dirs:
                 live = []
@@ -92,7 +94,7 @@ def profile(sf_dirs: list[str], names: list[str], rounds: int) -> list[dict]:
         rec = eventlog.merge([build, exe])
         row.update({
             "build_s": b - a, "exec_s": c - b, "build_jobs": build["jobs"],
-            "driver_gap_s": eventlog.uncovered_s(rec, a, c),
+            "driver_gap_s": eventlog.uncovered_s(rec, a, c), "cpus": cpus,
             **{k: rec[k] for k in eventlog.COUNTERS},
         })
     return rows

@@ -7,11 +7,14 @@ sink) at sf0.001 / sf0.01 / sf0.1, plus the locally derived sf1 and
 sf10 when they exist (``python tools/gen_local.py sf1``, then
 ``sf10``; the read-only test data tops out at sf0.1). A cell
 is the min over the 2 rounds of ``build_s + exec_s``. Each session's
-cells append to scaling_history.jsonl, tagged ``"timer": "profile"``,
-and SCALING.md shows the per-cell min over the last 2 sessions with
-the same SF layout and timer, with the per-decade growth ratios.
-Untagged rows come from the hand-timed loop this replaced (event log
-off, warm runs at sf0.001 and sf10 only); the two are never merged.
+cells append to scaling_history.jsonl, tagged ``"timer": "profile"``
+and ``"cpus"`` (the session's ``defaultParallelism``), and SCALING.md
+shows the per-cell min over the last 2 sessions with the same SF
+layout, timer and core count, with the per-decade growth ratios.
+Rows without a ``timer`` come from the hand-timed loop this replaced
+(event log off, warm runs at sf0.001 and sf10 only); rows without
+``cpus`` were drawn on the 32-core host. Sessions that differ in any
+of the three are never merged.
 Linear work should show ratios well under 10 locally (fixed
 per-query overhead dominates small SFs); anything approaching or
 exceeding ~10 on the last measured step is flagged for review. A
@@ -37,6 +40,7 @@ SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"
 LOCAL = [os.path.join(ROOT, ".localdata", n) for n in ("sf1", "sf10")]
 FLAG_RATIO = 12.0  # growth on the final 10× step that warrants review
 TIMER = "profile"  # history tag: cells timed by query_profile.profile
+UNTAGGED_CPUS = 32  # history rows without "cpus" were drawn on local[32]
 # SCALING.md header line per history timer tag (None = untagged rows)
 TIMERS = {
     None: "hand-timed loop, event log off, warm runs at sf0.001 and sf10 only",
@@ -124,7 +128,9 @@ def main() -> None:
         sfs.append(d)
 
     best: dict[tuple[str, str], float] = {}
-    for r in profile(sfs, order, 2):
+    rows = profile(sfs, order, 2)
+    cpus = next((r["cpus"] for r in rows if "cpus" in r), None)
+    for r in rows:
         key = (r["query"], r["sf"])
         if "error" in r:
             print(f"# {r['query']} @ {os.path.basename(r['sf'])}: RAISED "
@@ -132,7 +138,7 @@ def main() -> None:
             continue
         t = r["build_s"] + r["exec_s"]
         best[key] = min(best.get(key, t), t)
-    entry = {"sfs": [os.path.basename(p) for p in sfs], "timer": TIMER, "queries": {
+    entry = {"sfs": [os.path.basename(p) for p in sfs], "timer": TIMER, "cpus": cpus, "queries": {
         q: [round(best[q, sf], 3) if (q, sf) in best else None for sf in sfs]
         for q in order
     }}
@@ -144,16 +150,19 @@ def main() -> None:
 def render(order: list[str], history_path: str = HISTORY,
            out_path: str = SCALING) -> None:
     """Compose SCALING.md from the last MERGE_SESSIONS history
-    entries with the newest entry's SF layout and timer (per-cell min)."""
+    entries with the newest entry's SF layout, timer and core count
+    (per-cell min)."""
     history = []
     if os.path.exists(history_path):
         with open(history_path) as fh:
             history = [json.loads(ln) for ln in fh if ln.strip()]
     if not history:
         raise SystemExit(f"scale_probe: no history in {history_path} to render")
-    sf_names, timer = history[-1]["sfs"], history[-1].get("timer")
-    sessions = [h for h in history
-                if h["sfs"] == sf_names and h.get("timer") == timer][-MERGE_SESSIONS:]
+    def layout(h):
+        return h["sfs"], h.get("timer"), h.get("cpus", UNTAGGED_CPUS)
+
+    sf_names, timer, cpus = layout(history[-1])
+    sessions = [h for h in history if layout(h) == layout(history[-1])][-MERGE_SESSIONS:]
     merged: dict[str, list] = {}
     for h in sessions:
         for name, times in h["queries"].items():
@@ -184,9 +193,10 @@ def render(order: list[str], history_path: str = HISTORY,
         "(auto-generated by tools/scale_probe.py; noop sink, build +",
         "exec seconds, min-of-2 per session, per-cell min over the last",
         f"{len(sessions)} probe session(s) — cross-session noise discipline,",
-        "raw draws in scaling_history.jsonl; warm session; local[32])",
+        f"raw draws in scaling_history.jsonl; warm session; local[{cpus}])",
         f"Timer: {TIMERS[timer]}.",
-        "Sessions timed another way are never merged into these cells.",
+        "Sessions timed another way or on another core count are never",
+        "merged into these cells.",
         "",
         "Each SF step is 10× the data (sf1 and sf10 are the locally",
         "tiled decade-up sets from tools/gen_local.py — key-shifted copies,",
